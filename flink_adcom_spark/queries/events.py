@@ -948,7 +948,7 @@ def q150_covisit_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Only the vertex COUNT (one scalar) ever leaves the cluster. Iterations
     here are unrolled 3 deep — at production depth, localCheckpoint per
     round exactly as operators/components.py does."""
-    from ..tables import memo_relation, memo_value
+    from ..tables import memo, memo_relation
 
     # materialize the symmetric edge list ONCE (the components.py posture):
     # every iteration joins it, and without this each of the 3 unrolled
@@ -973,7 +973,7 @@ def q150_covisit_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "q150_covisit_sym", build_sym, source_table="events"
     )
     ws = sym.groupBy("src").agg(F.sum("w").alias("wsum"))
-    n = memo_value(
+    n = memo(
         spark, sf_dir, "q150_covisit_nv", ws.count, source_table="events"
     )
     r = ws.select(F.col("src").alias("v"), F.lit(1.0 / n).alias("rank"))

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import load_table
+from ..tables import load_table, memo
 
 N_QUERY_VECS = 20  # vec_id < 20 are the query workload
 TOP_K = 3
@@ -436,7 +436,7 @@ def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid-update step is q52). posexplode + avg, then reassembled.
     Extracted from _ivf_knn unchanged so q54/q55 and the IVF-PQ composition
     (q200) share one routing definition. Memoized per embeddings
-    fingerprint (the _PQ_BOOK_CACHE discipline): the cell-centroid table
+    fingerprint (tables.memo, like _pq_books): the cell-centroid table
     is part of the PERSISTED index artifact — the streaming searcher (q203)
     already reads it from parquet — and every probe re-derived it per
     build. Routing + list search stay per-run work."""
@@ -593,54 +593,32 @@ KMEANS_ITERS = 3
 KMEANS_TARGET_CLUSTER = 64
 
 
-_EMB_COUNT_CACHE: dict[tuple[str, str, str], int] = {}
-
-
-def _emb_fingerprint(sf_dir: str) -> str:
-    """Keys the count memo so an in-place rewrite of the embeddings table
-    invalidates the cached count instead of silently desynchronizing the
-    Spark-derived k from the live-counting DuckDB oracle. Shares the
-    fingerprint law with load_table's normalized-handle cache."""
-    from flink_adcom_spark.tables import table_fingerprint, table_path
-
-    return table_fingerprint(table_path(sf_dir, "embeddings"))
-
-
 def _emb_count(spark: SparkSession, sf_dir: str) -> int:
     """COUNT(*) on the BARE table (parquet footer counts — ~2x cheaper than
     counting the projected+norm frame; measured 0.22 s vs 0.50 s at sf0.1).
-    Memoized per (directory, file fingerprint): the synthetic tables are
-    immutable in practice, and the k-derivation otherwise pays one counting
-    job per build (the bench builds each query 3x); the fingerprint keeps a
-    rewritten-in-place table from serving a stale count."""
-    key = (sf_dir, "", _emb_fingerprint(sf_dir))
-    if key not in _EMB_COUNT_CACHE:
-        _evict_stale_counts(key)
-        _EMB_COUNT_CACHE[key] = load_table(spark, sf_dir, "embeddings").count()
-    return _EMB_COUNT_CACHE[key]
-
-
-def _evict_stale_counts(key: tuple[str, str, str]) -> None:
-    """Drop memoized counts for the same (sf_dir, selector) under OLDER
-    fingerprints — a session that rewrites the table repeatedly should not
-    accumulate one dead entry per generation (ADVICE r9)."""
-    for stale in [k for k in _EMB_COUNT_CACHE if k[:2] == key[:2]]:
-        del _EMB_COUNT_CACHE[stale]
+    Memoized per table fingerprint (tables.memo): the k-derivation otherwise
+    pays one counting job per build (the bench builds each query 3x), and
+    the fingerprint keeps a rewritten-in-place table from serving a stale
+    count that would desynchronize the Spark-derived k from the
+    live-counting DuckDB oracle."""
+    return memo(
+        spark, sf_dir, "emb_count",
+        lambda: load_table(spark, sf_dir, "embeddings").count(),
+        source_table="embeddings",
+    )
 
 
 def _emb_train_count(spark: SparkSession, sf_dir: str, min_vec_id: int) -> int:
     """Memoized count of the q119 TRAIN corpus (vec_id >= min_vec_id): the
     filter defeats footer-only counting, so without the memo every build
     pays a real counting job (the bench builds each query 3x)."""
-    key = (sf_dir, f">={min_vec_id}", _emb_fingerprint(sf_dir))
-    if key not in _EMB_COUNT_CACHE:
-        _evict_stale_counts(key)
-        _EMB_COUNT_CACHE[key] = (
-            load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") >= min_vec_id)
-            .count()
-        )
-    return _EMB_COUNT_CACHE[key]
+    return memo(
+        spark, sf_dir, ("emb_train_count", min_vec_id),
+        lambda: load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") >= min_vec_id)
+        .count(),
+        source_table="embeddings",
+    )
 
 
 def derive_kmeans_k(n: int) -> int:
@@ -654,39 +632,31 @@ def derive_kmeans_k(n: int) -> int:
 
 
 # Trained coarse-quantizer centroids per (sf_dir, table fingerprint, train
-# selector, k, iters) — the _PQ_BOOK_CACHE discipline applied to the Lloyd
-# trainings that q57/q58/q112/q156/q119 (and the audit tier through them)
-# each re-ran per BUILD: centroids are a pure deterministic function of the
-# corpus, and in production they are the PERSISTED index artifact; the bench
-# builds each query 3x, so re-deriving them paid (iters+1) driver-coordinated
+# selector) in the one memo (tables.memo), for the Lloyd trainings that
+# q57/q58/q112/q156/q119 (and the audit tier through them) each re-ran per
+# BUILD: centroids are a pure deterministic function of the corpus, and in
+# production they are the PERSISTED index artifact; the bench builds each
+# query 3x, so re-deriving them paid (KMEANS_ITERS+1) driver-coordinated
 # jobs per build. Final ASSIGNMENT stays per-run scan work (the result is
-# never cached). Fingerprint keying + eviction follow _EMB_COUNT_CACHE.
-_KMEANS_CENT_CACHE: dict[tuple, list[list[float]]] = {}
-
-
+# never cached). The key leaves out k (ADVICE r14): k follows from the
+# fingerprinted table through derive_kmeans_k, so a regenerated table that
+# changes k replaces the old-k entry instead of stranding it.
 def _kmeans_centroids(
     spark: SparkSession,
     sf_dir: str,
     train_builder,
     selector: str,
     k: int,
-    iters: int = KMEANS_ITERS,
 ) -> list[list[float]]:
     from ..operators.kmeans import lloyd_kmeans
 
-    key = (sf_dir, _emb_fingerprint(sf_dir), selector, k, iters)
-    cents = _KMEANS_CENT_CACHE.get(key)
-    if cents is None:
-        # evict by (sf_dir, selector) REGARDLESS of k/iters (ADVICE r14): a
-        # regenerated table changes n and hence derive_kmeans_k's k, so a
-        # same-k match would strand the old-k entry resident forever
-        for stale in [
-            x for x in _KMEANS_CENT_CACHE if x[0] == sf_dir and x[2] == key[2]
-        ]:
-            del _KMEANS_CENT_CACHE[stale]
-        _, cents = lloyd_kmeans(train_builder(), "v", "vec_id", k=k, iters=iters)
-        _KMEANS_CENT_CACHE[key] = cents
-    return cents
+    return memo(
+        spark, sf_dir, ("kmeans_centroids", selector),
+        lambda: lloyd_kmeans(
+            train_builder(), "v", "vec_id", k=k, iters=KMEANS_ITERS
+        )[1],
+        source_table="embeddings",
+    )
 
 
 def _k_sql(train_src: str = "vecs") -> str:
@@ -826,7 +796,7 @@ def q57_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cents = _kmeans_centroids(
         spark, sf_dir, lambda: e, "all",
-        k=derive_kmeans_k(_emb_count(spark, sf_dir)), iters=KMEANS_ITERS,
+        k=derive_kmeans_k(_emb_count(spark, sf_dir)),
     )
     return assign_clusters(e, "v", cents).select("vec_id", "cluster")
 
@@ -1248,7 +1218,6 @@ def q119_index_assign_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = _kmeans_centroids(
         spark, sf_dir, lambda: train, f">={INDEX_BATCH_MAX}",
         k=derive_kmeans_k(_emb_train_count(spark, sf_dir, INDEX_BATCH_MAX)),
-        iters=KMEANS_ITERS,
     )
     return assign_clusters(batch, "v", centroids).select(
         "vec_id", F.col("cluster").cast("int").alias("cluster")
@@ -1465,7 +1434,7 @@ def q156_contrastive_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = e.select("vec_id", "v")
     centroids = _kmeans_centroids(
         spark, sf_dir, lambda: pts, "all",
-        k=derive_kmeans_k(_emb_count(spark, sf_dir)), iters=KMEANS_ITERS,
+        k=derive_kmeans_k(_emb_count(spark, sf_dir)),
     )
     asg = assign_clusters_ranked(e, "v", centroids).localCheckpoint(eager=True)
 
@@ -1719,8 +1688,8 @@ def q156b_contrastive_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bkey")
         )
 
-    # N x SRP_BANDS rows, the PERSISTED SRP-LSH signature index (the
-    # _PQ_BOOK_CACHE discipline for a DataFrame-shaped artifact): memoized
+    # N x SRP_BANDS rows, the PERSISTED SRP-LSH signature index (tables.memo
+    # for a DataFrame-shaped artifact): memoized
     # per embeddings fingerprint so the band self-join's two sides AND
     # repeat builds read one materialization instead of re-running the
     # signature pass — in production this table is written once per index
@@ -1812,14 +1781,11 @@ def _pq_chain(m: int, emit_centroids: bool = False) -> str:
     )
 
 
-# trained codebooks per (sf_dir, table fingerprint): centroids are a pure
-# deterministic function of the corpus, and in production they are the
-# PERSISTED index artifact — re-deriving them on every build (the bench
-# builds each query 3x) re-paid 8 x (iters+1) driver-coordinated jobs. The
-# fingerprint keying + eviction follows _EMB_COUNT_CACHE exactly.
-_PQ_BOOK_CACHE: dict[tuple[str, str], list[list[list[float]]]] = {}
-
-
+# trained codebooks per (sf_dir, table fingerprint) in the one memo
+# (tables.memo): centroids are a pure deterministic function of the corpus,
+# and in production they are the PERSISTED index artifact — re-deriving them
+# on every build (the bench builds each query 3x) re-paid 8 x (iters+1)
+# driver-coordinated jobs.
 def _pq_books(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     """The trained per-subspace codebooks — the Spark twin of the 8 prefixed
     oracle chains' centroid derivation (shared lloyd_kmeans body, so
@@ -1836,11 +1802,7 @@ def _pq_books(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
 
     from ..operators.kmeans import lloyd_kmeans
 
-    key = (sf_dir, _emb_fingerprint(sf_dir))
-    books = _PQ_BOOK_CACHE.get(key)
-    if books is None:
-        for stale in [k for k in _PQ_BOOK_CACHE if k[0] == sf_dir]:
-            del _PQ_BOOK_CACHE[stale]
+    def build() -> list[list[list[float]]]:
         e = _emb(spark, sf_dir)
 
         def train(m: int):
@@ -1850,9 +1812,9 @@ def _pq_books(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
             return lloyd_kmeans(sub, "sv", "vec_id", k=PQ_K, iters=PQ_ITERS)[1]
 
         with ThreadPoolExecutor(max_workers=PQ_M) as ex:
-            books = list(ex.map(train, range(PQ_M)))
-        _PQ_BOOK_CACHE[key] = books
-    return books
+            return list(ex.map(train, range(PQ_M)))
+
+    return memo(spark, sf_dir, "pq_books", build, source_table="embeddings")
 
 
 def pq_code_str_col(books: list[list[list[float]]], vec_col: str = "v"):

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..operators.fastlit import int_array_lit, int_matrix_lit
 from ..registry import query
-from ..tables import load_table, widen_scan
+from ..tables import load_table, memo, widen_scan
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 
@@ -38,22 +38,14 @@ def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
 
 
-# memoized documents COUNT(*) per (sf_dir, table fingerprint) — the
-# similarity._EMB_COUNT_CACHE pattern: footer-only counting job paid once
-# per table generation, used to gate size-dependent plan choices (the q190
-# margin-broadcast gate)
-_DOC_COUNT_CACHE: dict[tuple[str, str], int] = {}
-
-
 def _doc_count(spark: SparkSession, sf_dir: str) -> int:
-    from ..tables import table_fingerprint, table_path
-
-    key = (sf_dir, table_fingerprint(table_path(sf_dir, "documents")))
-    if key not in _DOC_COUNT_CACHE:
-        for stale in [k for k in _DOC_COUNT_CACHE if k[0] == sf_dir]:
-            del _DOC_COUNT_CACHE[stale]
-        _DOC_COUNT_CACHE[key] = _documents(spark, sf_dir).count()
-    return _DOC_COUNT_CACHE[key]
+    """documents COUNT(*) memoized per table fingerprint (tables.memo, like
+    similarity._emb_count): footer-only counting job paid once per table
+    generation, used to gate size-dependent plan choices (the q190
+    margin-broadcast gate)."""
+    return memo(
+        spark, sf_dir, "doc_count", lambda: _documents(spark, sf_dir).count()
+    )
 
 
 # --- deterministic case folding -----------------------------------------------
@@ -3357,7 +3349,7 @@ def q190_trained_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _documents(spark, sf_dir).select("doc_id", "text", "lang")
     # the hashed-trigram feature relation is a pure function of the corpus
     # and the single corpus-sized job in the round loop — memoized per
-    # documents fingerprint (the _PQ_BOOK_CACHE discipline; in production
+    # documents fingerprint (tables.memo, like _pq_books; in production
     # the featurized table is the persisted artifact a training run reads).
     # Training rounds + scoring stay per-run work.
     fl_mc = memo_relation(
@@ -5165,9 +5157,9 @@ def _cell_offset_map(
     ccnet_staged_perm, so planning a consumer again (q243/q246, q253's
     rebuild of q246) reuses the offsets instead of re-running the
     cell-aggregation job."""
-    from ..tables import memo_value
+    from ..tables import memo
 
-    cells = memo_value(
+    cells = memo(
         spark,
         sf_dir,
         key,
@@ -5764,7 +5756,7 @@ def q256_phrase_postings_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     phrase, so the merge shuffles only the batch's hits."""
     import os
 
-    from ..tables import memo_value
+    from ..tables import memo
     from ..workdirs import gate_workdir
 
     base = _documents(spark, sf_dir)
@@ -5786,7 +5778,7 @@ def q256_phrase_postings_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return path
 
-    postings_path = memo_value(spark, sf_dir, "phrase_postings_path", build_postings)
+    postings_path = memo(spark, sf_dir, "phrase_postings_path", build_postings)
     frozen = spark.read.parquet(postings_path)
     batch_postings = _phrase_postings(widen_scan(base.filter(is_new)))
     return (

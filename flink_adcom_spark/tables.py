@@ -231,27 +231,33 @@ def _normalize_to_declared(df: DataFrame, name: str) -> DataFrame:
     return df.select(*[f.name for f in declared.fields])
 
 
-# Normalized-table memo: the drift checks + per-column casts in
-# _normalize_to_declared cost ~0.15 s of DRIVER-side plan construction per
-# call (measured at sf0.1) — pure Python/analysis overhead that re-runs for
-# every build of every query against the same immutable table. DataFrames
-# are immutable plan handles BOUND TO THEIR SESSION, so the memo is a
-# WeakKeyDictionary keyed on the SparkSession (a new/replacement session
-# gets fresh handles and never sees another session's plans; a dropped
-# session releases its entries), with the inner key carrying the table path
-# and the files' mtime+size fingerprint — a cached handle's file index pins
-# the listing at read time, so an in-place rewrite must miss the cache or
-# every consumer reads deleted part files.
-_TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+# The one artifact memo. Everything the engine derives once per table
+# generation lives here: normalized table handles (the drift checks and casts
+# in _normalize_to_declared cost ~0.15 s of driver-side planning per call at
+# sf0.1), derived relations (a dedup keep-list, a contamination list, a
+# tokenizer's vocabulary-encode table), driver-side values (table counts,
+# trained k-means centroids and PQ codebooks, cell offsets) and widen_scan's
+# partition counts. In production these are PERSISTED pipeline artifacts
+# written once and read by every consumer; in the test harness each composed
+# query build would otherwise re-derive them (the bench builds each query 3x —
+# VERDICT r10 #8 measured q175 paying the whole manifest chain per build).
+# DataFrames are immutable plan handles BOUND TO THEIR SESSION, so the store
+# is a WeakKeyDictionary keyed on the SparkSession: a new session gets fresh
+# handles and never sees another session's plans, and a dropped session
+# releases its entries. Within a session the key carries the source table's
+# mtime+size fingerprint — a cached handle's file index pins the listing at
+# read time, so an in-place rewrite must miss or every consumer reads deleted
+# part files.
+_MEMO_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def table_fingerprint(path: str) -> str:
     """mtime_ns + size of a parquet path (file, or every file under a
     directory tree — os.walk, so a hive-partitioned layout's leaf rewrite
     changes the fingerprint even when no top-level mtime moves) — the
-    cache-invalidation key for anything that memoizes per-table state (the
-    normalized-handle cache here, the embeddings count memo in
-    queries/similarity.py)."""
+    invalidation key of the memo below."""
     import os
 
     try:
@@ -270,41 +276,50 @@ def table_fingerprint(path: str) -> str:
         return "unstat-able"
 
 
+def memo(
+    spark: SparkSession,
+    sf_dir: str,
+    key,
+    build,
+    source_table: str = "documents",
+):
+    """Session-scoped memo with one law: `build()` runs once per
+    (key, sf_dir, fingerprint-of-source_table), and a miss first drops every
+    entry with the same (key, sf_dir) — a session that rewrites a table
+    repeatedly holds one entry per key, never one per generation it read
+    (ADVICE r9, r14). `key` must therefore leave out anything that follows
+    from the fingerprinted table (a derived k, a row count)."""
+    per_session = _MEMO_CACHE.setdefault(spark, {})
+    k = (key, sf_dir, table_fingerprint(table_path(sf_dir, source_table)))
+    if k not in per_session:
+        for stale in [x for x in per_session if x[:2] == k[:2]]:
+            del per_session[stale]
+        per_session[k] = build()
+    return per_session[k]
+
+
+def memo_forget(spark: SparkSession, sf_dir: str) -> None:
+    """Drop this session's memo entries built over `sf_dir`, so the next
+    consumer pays every derivation again (the bench's cold sf1 tier)."""
+    per_session = _MEMO_CACHE.get(spark, {})
+    for stale in [x for x in per_session if x[1] == sf_dir]:
+        del per_session[stale]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
     _pin_session_confs(spark)
-    per_session = _TABLE_CACHE.setdefault(spark, {})
-    key = (sf_dir, name, table_fingerprint(table_path(sf_dir, name)))
-    if key in per_session:
-        return per_session[key]
-    # Evict handles for the same (sf_dir, name) under older fingerprints —
-    # a session that rewrites a table repeatedly would otherwise accumulate
-    # dead DataFrame handles for every generation it ever read.
-    for stale in [k for k in per_session if k[:2] == key[:2]]:
-        del per_session[stale]
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events":
-        # runs before the generic cast: epoch-nanos BIGINT needs DIV 1000,
-        # which a plain cast-to-timestamp would get wrong by 1000x.
-        df = normalize_event_ts(df)
-    out = _normalize_to_declared(df, name)
-    per_session[key] = out
-    return out
 
+    def build() -> DataFrame:
+        df = spark.read.parquet(table_path(sf_dir, name))
+        if name == "events":
+            # runs before the generic cast: epoch-nanos BIGINT needs DIV 1000,
+            # which a plain cast-to-timestamp would get wrong by 1000x.
+            df = normalize_event_ts(df)
+        return _normalize_to_declared(df, name)
 
-# Memoized DERIVED relations (per session, per source-table fingerprint):
-# the _PQ_BOOK_CACHE discipline generalized from driver-held artifacts to
-# DataFrame-shaped ones. In production these are PERSISTED pipeline
-# artifacts (a dedup keep-list, a contamination list, a tokenizer's
-# vocabulary-encode table) written once and read by every consumer; in the
-# test harness each composed query build would otherwise re-derive them
-# (the bench builds each query 3x — VERDICT r10 #8 measured q175 paying
-# the whole manifest chain per build). localCheckpoint(eager=False)
-# materializes the relation on first use and replays blocks afterwards.
-_RELATION_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+    return memo(spark, sf_dir, ("table", name), build, source_table=name)
 
 
 def memo_relation(
@@ -314,44 +329,12 @@ def memo_relation(
     build,
     source_table: str = "documents",
 ) -> DataFrame:
-    """Session-scoped memo of a derived relation: `build()` is called once
-    per (key, sf_dir, fingerprint-of-source_table) and its localCheckpoint
-    handle reused; older-fingerprint entries for the same (key, sf_dir)
-    are evicted (the load_table/_EMB_COUNT_CACHE law)."""
-    per_session = _RELATION_CACHE.setdefault(spark, {})
-    k = (key, sf_dir, table_fingerprint(table_path(sf_dir, source_table)))
-    df = per_session.get(k)
-    if df is None:
-        for stale in [x for x in per_session if x[:2] == k[:2]]:
-            del per_session[stale]
-        df = build().localCheckpoint(eager=False)
-        per_session[k] = df
-    return df
-
-
-def memo_value(
-    spark: SparkSession,
-    sf_dir: str,
-    key: str,
-    build,
-    source_table: str = "documents",
-):
-    """memo_relation's law for plain driver-side values (bounded collect
-    results like the <= 3 x PACK_SHARDS curriculum cell offsets): `build()`
-    runs once per (key, sf_dir, fingerprint-of-source_table); stale
-    fingerprints for the same (key, sf_dir) are evicted. Keeps repeat
-    consumers (q243/q246/q253 all plan over the same offsets) from
-    re-running the cell-aggregation job at every planning."""
-    per_session = _RELATION_CACHE.setdefault(spark, {})
-    k = ("value", key, sf_dir, table_fingerprint(table_path(sf_dir, source_table)))
-    if k not in per_session:
-        for stale in [x for x in per_session if x[:3] == k[:3]]:
-            del per_session[stale]
-        per_session[k] = build()
-    return per_session[k]
-
-
-_WIDEN_NPARTS_CACHE: dict[int, int] = {}
+    """memo() of a derived relation: localCheckpoint(eager=False)
+    materializes it on first use and replays its blocks afterwards."""
+    return memo(
+        spark, sf_dir, key, lambda: build().localCheckpoint(eager=False),
+        source_table,
+    )
 
 
 def widen_scan(df: DataFrame) -> DataFrame:
@@ -365,22 +348,23 @@ def widen_scan(df: DataFrame) -> DataFrame:
     q190's feature build 7.0 -> 4.6 s at sf0.1).
 
     Streaming DataFrames pass through unchanged (rdd conversion would throw),
-    and the partition count is memoized per semantically-equal plan so
-    repeated calls on the same (session-memoized) table don't re-pay the
-    plan-to-RDD conversion (ADVICE r10)."""
+    and the partition count is memoized in the session's memo store per
+    semantically-equal plan so repeated calls on the same (session-memoized)
+    table don't re-pay the plan-to-RDD conversion (ADVICE r10)."""
     if df.isStreaming:
         return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
     try:
-        key = df.semanticHash()
+        key = ("widen_scan", df.semanticHash())
     except Exception:
         key = None
-    n = _WIDEN_NPARTS_CACHE.get(key) if key is not None else None
+    per_session = _MEMO_CACHE.setdefault(spark, {})
+    n = per_session.get(key) if key is not None else None
     if n is None:
         n = df.rdd.getNumPartitions()
         if key is not None:
-            _WIDEN_NPARTS_CACHE[key] = n
+            per_session[key] = n
     if n * 2 < target:
         return df.repartition(target)
     return df

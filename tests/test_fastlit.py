@@ -51,8 +51,12 @@ def _cmp(spark, fast_col, slow_col):
     for x, y in zip(a, b):
         # BIT-level equality (ADVICE r14): SQL `a = b` treats -0.0 == 0.0,
         # so a sign-of-zero drift between the F.expr and F.lit paths would
-        # pass silently; struct.pack compares the raw 8/4-byte payloads
-        if isinstance(x, float) or isinstance(y, float):
+        # pass silently; struct.pack compares the raw 8/4-byte payloads. A
+        # None on either side is a value drift, reported as one before
+        # struct.pack would raise a TypeError that hides it.
+        if x is None or y is None:
+            assert x is y, f"value drift: {x!r} != {y!r}"
+        elif isinstance(x, float) or isinstance(y, float):
             assert struct.pack("<d", x) == struct.pack("<d", y), (
                 f"bit drift: {x!r} != {y!r} (of {row['a']!r} vs {row['b']!r})"
             )

@@ -57,18 +57,24 @@ def test_missing_column_fails_loudly(spark, sf_dir, tmp_path):
         load_table(spark, drift, "nation")
 
 
-def test_memo_relation_reuses_then_invalidates_on_rewrite(spark, sf_dir, tmp_path):
-    """memo_relation must (a) call build() once per (key, sf_dir, table
-    fingerprint) and return the same handle, and (b) MISS after the source
-    table is rewritten in place — a stale memoized keep-list silently
-    feeding q110/q175 after an ingest would be the exact bug the
-    fingerprint law exists to prevent (the load_table/_EMB_COUNT_CACHE
-    precedent)."""
+@pytest.mark.parametrize("form", ["relation", "value"])
+def test_memo_reuses_then_invalidates_on_rewrite(spark, sf_dir, tmp_path, form):
+    """The one memo law (tables.memo), in its relation form (memo_relation,
+    a localCheckpoint handle) and its value form (a driver-side count):
+    (a) build() runs once per (key, sf_dir, table fingerprint) and the same
+    result is returned; (b) it runs again after the source table is
+    rewritten in place — a stale memoized keep-list silently feeding
+    q110/q175 after an ingest is the bug the fingerprint law prevents;
+    (c) after three rewrites the store holds exactly one entry for the
+    (key, sf_dir), so no generation is stranded (the eviction bugs of
+    ADVICE r9 on counts and r14 on k-means); (d) a second session builds
+    its own entry and never receives the first session's DataFrame."""
     import shutil
     import time as _time
 
-    from flink_adcom_spark.tables import memo_relation
+    from flink_adcom_spark.tables import _MEMO_CACHE, memo, memo_relation
 
+    memoize = memo_relation if form == "relation" else memo
     work = str(tmp_path / "sfmemo")
     os.makedirs(work, exist_ok=True)
     src = os.path.join(sf_dir, "documents.parquet")
@@ -77,19 +83,46 @@ def test_memo_relation_reuses_then_invalidates_on_rewrite(spark, sf_dir, tmp_pat
 
     calls = []
 
-    def build():
-        calls.append(1)
-        return load_table(spark, work, "documents").select("doc_id")
+    def build_in(session):
+        def build():
+            calls.append(session)
+            df = load_table(session, work, "documents").select("doc_id")
+            return df if form == "relation" else df.count()
 
-    a = memo_relation(spark, work, "t_memo", build)
-    b = memo_relation(spark, work, "t_memo", build)
+        return build
+
+    def rows(out):
+        return out.count() if form == "relation" else out
+
+    def rewrite(n):
+        _time.sleep(0.01)
+        spark.read.parquet(src).limit(n).write.mode("overwrite").parquet(
+            dst + ".tmp"
+        )
+        shutil.rmtree(dst) if os.path.isdir(dst) else os.remove(dst)
+        os.rename(dst + ".tmp", dst)
+
+    a = memoize(spark, work, "t_memo", build_in(spark))
+    b = memoize(spark, work, "t_memo", build_in(spark))
     assert a is b and len(calls) == 1
-    n0 = a.count()
+    n0 = rows(a)
     # in-place rewrite: new mtime/size -> new fingerprint -> rebuild
-    _time.sleep(0.01)
-    spark.read.parquet(src).limit(10).write.mode("overwrite").parquet(dst + ".tmp")
-    shutil.rmtree(dst) if os.path.isdir(dst) else os.remove(dst)
-    os.rename(dst + ".tmp", dst)
-    c = memo_relation(spark, work, "t_memo", build)
+    rewrite(10)
+    c = memoize(spark, work, "t_memo", build_in(spark))
     assert len(calls) == 2 and c is not a
-    assert c.count() == 10 and n0 != 10
+    assert rows(c) == 10 and n0 != 10
+    for n in (20, 30):
+        rewrite(n)
+        assert rows(memoize(spark, work, "t_memo", build_in(spark))) == n
+    assert len(calls) == 4
+    entries = [k for k in _MEMO_CACHE[spark] if k[:2] == ("t_memo", work)]
+    assert len(entries) == 1
+
+    other = spark.newSession()
+    d = memoize(other, work, "t_memo", build_in(other))
+    assert calls[-1] is other and len(calls) == 5
+    assert rows(d) == 30
+    if form == "relation":
+        assert d.sparkSession is other
+        assert d is not memoize(spark, work, "t_memo", build_in(spark))
+    assert len(calls) == 5
