@@ -48,11 +48,6 @@ def sql_dec_sum(expr: str, typ: str = MONEY) -> str:
     return f"CAST(SUM(CAST({expr} AS {typ})) AS DOUBLE)"
 
 
-def sql_dec_avg(expr: str, typ: str = MONEY) -> str:
-    # COUNT(expr), not COUNT(*): AVG NULL semantics (see dec_avg)
-    return f"(CAST(SUM(CAST({expr} AS {typ})) AS DOUBLE) / COUNT({expr}))"
-
-
 # -- decimal column factories for derived money expressions -------------------
 
 def money(col: str) -> Column:

@@ -24,38 +24,43 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def cluster_expr(vec, centroids: list[list[float]]):
-    """Nearest-centroid index as a pure COLUMN over any vector expression
-    (ties -> lowest index, via array_position returning the first match) —
-    usable several times in one projection (the PQ case: 8 subspace codes
-    off a single scan).
+def sq_dists(vec: str, matrix: list[list[float]]):
+    """array<double> of squared L2 distances from the vector SQL expression
+    `vec` to each row of `matrix` — the one per-centroid fold every
+    nearest-centroid consumer shares (cluster_expr, assign_clusters_ranked,
+    similarity.adc_topk's lookup tables):
 
-    The centroid matrix enters the plan as ONE array<array<double>> literal
-    (a genuine broadcast-style constant) with the per-centroid distances
-    computed by HOFs over it — NOT as k*dim scalar literal nodes unrolled
-    into the expression tree, which at IVF scale (k=256, d=512 -> ~131k
-    nodes) would blow Catalyst analysis and codegen method-size limits.
-    Built via one F.expr parse, not F.lit(list) (one py4j call per element
-    — measured 110x slower plan construction; operators/fastlit.py).
-    Arithmetic: per-centroid squared-distance fold in element order."""
-    from .fastlit import double_matrix_lit
+        transform(<matrix>, c -> aggregate(zip_with(<vec>, c,
+            (x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x))
 
-    cmat = double_matrix_lit(centroids)
-    dists = F.transform(
-        cmat,
-        lambda c: F.aggregate(
-            F.zip_with(vec, c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
+    Element-order left fold from 0.0 — the order the SQL oracles restate
+    (similarity._kmeans_dist_sql), so argmin ties see bit-equal distances.
+    ONE F.expr parse with the matrix as ONE literal node
+    (fastlit.double_matrix_sql): PySpark's lambda API costs py4j round
+    trips per lambda, and a matrix spelled as nested arrays enters the
+    analysed plan as a k*dim CreateArray tree (at IVF scale, k=256 and
+    d=512, ~131k nodes)."""
+    from .fastlit import double_matrix_sql
+
+    return F.expr(
+        f"transform({double_matrix_sql(matrix)}, c -> aggregate(zip_with({vec}, c, "
+        "(x, y) -> (x - y) * (x - y)), 0.0D, (acc, x) -> acc + x))"
     )
+
+
+def cluster_expr(vec: str, centroids: list[list[float]]):
+    """Nearest-centroid index of the vector SQL expression `vec` as a pure
+    COLUMN (ties -> lowest index, via array_position returning the first
+    match) — usable several times in one projection (the PQ case: 8
+    subspace codes off a single scan)."""
+    dists = sq_dists(vec, centroids)
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
 def assign_clusters(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> DataFrame:
     """Add a `cluster` column: index of the nearest centroid (cluster_expr
     above applied to a named column)."""
-    return df.withColumn("cluster", cluster_expr(F.col(vec_col), centroids))
+    return df.withColumn("cluster", cluster_expr(f"`{vec_col}`", centroids))
 
 
 def assign_clusters_ranked(
@@ -68,18 +73,7 @@ def assign_clusters_ranked(
     winner stays eligible and the tie resolves to the lower index — the
     same `ORDER BY dist, cid` rule the SQL oracles state). No shuffle, no
     window; requires k >= 2."""
-    from .fastlit import double_matrix_lit
-
-    cmat = double_matrix_lit(centroids)
-    dists = F.transform(
-        cmat,
-        lambda c: F.aggregate(
-            F.zip_with(F.col(vec_col), c, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
-    df = df.withColumn("__d", dists)
+    df = df.withColumn("__d", sq_dists(f"`{vec_col}`", centroids))
     i1 = F.array_position("__d", F.array_min("__d")) - 1
     df = df.withColumn("cluster", i1.cast("int"))
     masked = F.transform(

@@ -673,7 +673,7 @@ EMB_DIM = 64  # embeddings fixture dimension (TESTDATA.md)
 
 def _kmeans_dist_sql(v: str, c: str) -> str:
     """Squared L2 distance with the IDENTICAL left-fold order as the Spark
-    side (operators/kmeans.py::_sq_dist: zip_with diff-squares, then
+    side (operators/kmeans.py::sq_dists: zip_with diff-squares, then
     aggregate fold from 0.0) — double addition is not associative, and the
     argmin tie rule needs bit-equal distances."""
     return (
@@ -1827,9 +1827,8 @@ def pq_code_str_col(books: list[list[list[float]]], vec_col: str = "v"):
     from ..operators.kmeans import cluster_expr
 
     codes = [
-        cluster_expr(
-            F.slice(vec_col, m * PQ_SUB + 1, PQ_SUB), books[m]
-        ).cast("string")
+        cluster_expr(f"slice(`{vec_col}`, {m * PQ_SUB + 1}, {PQ_SUB})", books[m])
+        .cast("string")
         for m in range(PQ_M)
     ]
     return F.concat_ws(":", *codes)
@@ -1888,7 +1887,7 @@ def pq_index_codes(
     from ..operators.kmeans import cluster_expr
 
     code_cols = [
-        cluster_expr(F.slice("v", m * PQ_SUB + 1, PQ_SUB), books[m]).alias(f"c{m}")
+        cluster_expr(f"slice(v, {m * PQ_SUB + 1}, {PQ_SUB})", books[m]).alias(f"c{m}")
         for m in range(PQ_M)
     ]
     return e.select(F.col("vec_id").alias("n_id"), *extra_cols, *code_cols)
@@ -1940,23 +1939,14 @@ def adc_topk(
     element_at lookups, fully codegen-compatible."""
     from pyspark.sql import Window
 
-    from ..operators.fastlit import double_matrix_lit
-
-    def lut(m: int):
-        return F.transform(
-            double_matrix_lit(books[m]),
-            lambda c: F.aggregate(
-                F.zip_with(f"qv{m}", c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            ),
-        ).alias(f"lut{m}")
+    from ..operators.kmeans import sq_dists
 
     # drop exactly the PQ slice columns (ADVICE r14): a prefix match would
     # silently swallow an unrelated future qv* column instead of erroring
     slice_cols = {f"qv{m}" for m in range(PQ_M)}
     keep = [c for c in q.columns if c not in slice_cols]
-    ql = q.select(*keep, *[lut(m) for m in range(PQ_M)])
+    ql = q.select(*keep, *[sq_dists(f"qv{m}", books[m]).alias(f"lut{m}")
+                           for m in range(PQ_M)])
     adc = F.lit(0.0)
     for m in range(PQ_M):
         adc = adc + F.element_at(f"lut{m}", F.col(f"c{m}") + 1)

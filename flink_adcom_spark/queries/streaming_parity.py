@@ -1210,16 +1210,17 @@ def q181_zorder_pruning_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "quality", "ml", "pipeline"),
 )
 def q184_stream_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-offline / score-online, externally gated: the perceptron is
-    trained in batch on the static corpus (q178's exact topology), then the
-    SAME corpus replayed as a 4-micro-batch document stream is scored by
+    """Train-offline / score-online, externally gated: the perceptron
+    weights are q178's own (text.clf_weights, one derivation per documents
+    generation shared with the batch gate), then the SAME corpus replayed
+    as a 4-micro-batch document stream is scored by
     streaming_classifier_scores_materialize; the drained batch_id-
     partitioned score table must hash-match q178's batch relation (and the
     DuckDB restatement of the whole train+score pipeline). Proves the
     serving path applies bit-identical arithmetic to the training path —
     the contract a production scorer has to hold or its quality gate
     silently drifts from the model's training distribution."""
-    from ..queries.text import clf_features_and_labels, perceptron_train
+    from ..queries.text import clf_weights
 
     work = gate_workdir("clf_stream_gate")
     feed = os.path.join(work, "feed")
@@ -1230,11 +1231,8 @@ def q184_stream_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame
     load_table(spark, sf_dir, "documents").repartition(4).write.mode(
         "overwrite"
     ).parquet(feed)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    fl = clf_features_and_labels(docs).localCheckpoint(eager=False)
-    weights = perceptron_train(fl)
     jobs.streaming_classifier_scores_materialize(
-        spark, feed, out, weights,
+        spark, feed, out, clf_weights(spark, sf_dir),
         checkpoint=os.path.join(work, "ckpt"), maxFilesPerTrigger=1,
     )
     return spark.read.parquet(out).select("doc_id", "label", "score", "correct")

@@ -19,8 +19,6 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # The ten driver-generated tables (TESTDATA.md). Types as produced by the driver.
 SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
@@ -236,8 +234,8 @@ def _normalize_to_declared(df: DataFrame, name: str) -> DataFrame:
 # in _normalize_to_declared cost ~0.15 s of driver-side planning per call at
 # sf0.1), derived relations (a dedup keep-list, a contamination list, a
 # tokenizer's vocabulary-encode table), driver-side values (table counts,
-# trained k-means centroids and PQ codebooks, cell offsets) and widen_scan's
-# partition counts. In production these are PERSISTED pipeline artifacts
+# trained models — k-means centroids, PQ codebooks and perceptron weights —
+# cell offsets) and widen_scan's partition counts. In production these are PERSISTED pipeline artifacts
 # written once and read by every consumer; in the test harness each composed
 # query build would otherwise re-derive them (the bench builds each query 3x —
 # VERDICT r10 #8 measured q175 paying the whole manifest chain per build).
@@ -368,17 +366,3 @@ def widen_scan(df: DataFrame) -> DataFrame:
     if n * 2 < target:
         return df.repartition(target)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Register every table as a temp view (mirrors the reference's
-    createTemporaryView path — TaxiRideCountDistinctTablePreAggregate.java:68 —
-    and the DuckDB oracle's pre-registered views)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
