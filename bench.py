@@ -678,13 +678,11 @@ def _adaptive_bundle_metric(spark, offer_rps: int = 120_000, run_s: float = 25.0
     an avoided scheduler round + sink/state commit (the reference's "fewer
     records cross the network per input record", Spark face).
 
-    BOTH adaptation modes are measured and reported separately: `paced`
-    (SelfPacedAdaptiveRunner — no-restart, interval enforced inside
-    foreachBatch, the reference's live-timer-swap parity path) and `restart`
-    (AdaptiveQueryRunner — stop/restart from checkpoint on each interval
-    change). `bundle_adaptive_*` keys are kept as aliases of the paced run
-    for round-over-round comparability (r5 recorded the paced runner under
-    that name).
+    The adaptive run is `paced` (SelfPacedAdaptiveRunner — no-restart,
+    interval enforced inside foreachBatch, the reference's live-timer-swap
+    parity path). `bundle_adaptive_*` keys are kept as aliases of the paced
+    run for round-over-round comparability (r5 recorded the paced runner
+    under that name).
 
     run_s=25 since r13: the controller starts at 50 ms and needs ~10 clean
     decision periods to widen past this box's ~450 ms micro-batch floor —
@@ -697,10 +695,7 @@ def _adaptive_bundle_metric(spark, offer_rps: int = 120_000, run_s: float = 25.0
         VariableRateFeeder,
         variable_words_stream,
     )
-    from flink_adcom_spark.streaming.adaptive import (
-        AdaptiveQueryRunner,
-        SelfPacedAdaptiveRunner,
-    )
+    from flink_adcom_spark.streaming.adaptive import SelfPacedAdaptiveRunner
     from flink_adcom_spark.streaming.controller import BandController
 
     def feed() -> tuple[str, "VariableRateFeeder", list]:
@@ -715,10 +710,10 @@ def _adaptive_bundle_metric(spark, offer_rps: int = 120_000, run_s: float = 25.0
 
     def make_proc(stats):
         # per-batch row counts keyed by epoch id, totals read off at the
-        # end: a checkpoint-replayed epoch (at-least-once foreachBatch after
-        # an adaptive restart) OVERWRITES its own entry instead of double-
-        # counting, and an epoch interrupted mid-count is simply re-recorded
-        # on replay — no seen-set ordering hazard either way.
+        # end: a replayed epoch (foreachBatch is at-least-once) OVERWRITES
+        # its own entry instead of double-counting, and an epoch interrupted
+        # mid-count is simply re-recorded on replay — no seen-set ordering
+        # hazard either way.
         per_batch: dict[int, int] = {}
 
         def proc(bdf, bid):
@@ -748,44 +743,15 @@ def _adaptive_bundle_metric(spark, offer_rps: int = 120_000, run_s: float = 25.0
         feeder.stop()
         return stats[0], stats[1], runner.controller.interval_ms
 
-    def run_restart() -> tuple[int, int, int, int]:
-        tmp, feeder, stats = feed()
-        proc = make_proc(stats)
-
-        def start_query(trigger_ms: int, ckpt: str):
-            return (
-                variable_words_stream(spark, os.path.join(tmp, "spool"))
-                .writeStream.foreachBatch(proc)
-                .trigger(processingTime=f"{trigger_ms} milliseconds")
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-
-        runner = AdaptiveQueryRunner(
-            start_query,
-            controller=BandController(interval_ms=50),
-            decision_period_s=1.5,
-            checkpoint_dir=os.path.join(tmp, "ckpt"),
-        )
-        rep = runner.run_for(run_s)
-        feeder.stop()
-        return stats[0], stats[1], runner.controller.interval_ms, rep.restarts
-
     sb, sr, _ = run_fixed_or_paced(adaptive=False)
     pb, pr, p_interval = run_fixed_or_paced(adaptive=True)
-    rb, rr, r_interval, restarts = run_restart()
     return {
         "bundle_static_batches": sb,
         "bundle_static_rows": sr,
         "bundle_paced_batches": pb,
         "bundle_paced_rows": pr,
         "bundle_paced_final_interval_ms": p_interval,
-        "bundle_restart_batches": rb,
-        "bundle_restart_rows": rr,
-        "bundle_restart_final_interval_ms": r_interval,
-        "bundle_restart_restarts": restarts,
         "bundle_ratio": round(sb / max(1, pb), 2),
-        "bundle_restart_ratio": round(sb / max(1, rb), 2),
         # aliases: r5 recorded the paced runner under these names
         "bundle_adaptive_batches": pb,
         "bundle_adaptive_rows": pr,

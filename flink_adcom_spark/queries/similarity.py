@@ -1800,6 +1800,8 @@ def _pq_books(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     ONE projection of one scan — no per-subspace assignment joins."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from ..operators.kmeans import lloyd_kmeans
 
     def build() -> list[list[list[float]]]:
@@ -1811,8 +1813,14 @@ def _pq_books(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
             )
             return lloyd_kmeans(sub, "sv", "vec_id", k=PQ_K, iters=PQ_ITERS)[1]
 
+        # each task carries this thread's local properties (job group,
+        # tags), so its jobs count toward the caller's group; one wrap per
+        # task gives each its own copy of the properties
         with ThreadPoolExecutor(max_workers=PQ_M) as ex:
-            return list(ex.map(train, range(PQ_M)))
+            futs = [
+                ex.submit(inheritable_thread_target(spark)(train), m) for m in range(PQ_M)
+            ]
+            return [f.result() for f in futs]
 
     return memo(spark, sf_dir, "pq_books", build, source_table="embeddings")
 

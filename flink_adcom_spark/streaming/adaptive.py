@@ -1,18 +1,18 @@
-"""AdaptiveQueryRunner — applies controller decisions to a live query.
+"""SelfPacedAdaptiveRunner — applies controller decisions to a live query.
 
 The reference pushes new intervals to running operators over MQTT
 (PreAggregateProcTimeListener.java:67-109: each subtask's listener thread
-updates the timer in place). Vanilla PySpark cannot retune a live query's
-trigger, so the honest v1 design (SURVEY.md §7.6) is restart-based
-adaptation: stop the query, restart with the new trigger from the same
-checkpoint — exactly-once under checkpointing, at the cost of a restart gap
-(measured and reported by the runner).
+updates the timer in place). A live Spark query's trigger cannot be
+retuned, so the runner enforces the flush interval itself: it wraps the
+query's foreachBatch function, pads each micro-batch out to the
+controller's current interval, and feeds the batch's busy time back to the
+BandController. A changed interval takes effect at the very next batch
+with the SAME query left running — no restart, no restart gap, and the
+checkpoint sees one uninterrupted query.
 
-At 100 TB this is still the right shape: trigger changes are rare (the
-controller decides at 120 s cadence) and a micro-batch restart from
-checkpoint costs seconds, so the amortized overhead is negligible; the win —
-bigger bundles under backpressure, lower latency when idle — is the same one
-the AdCom paper demonstrates.
+At 100 TB this is still the right shape: the controller decides at a
+coarse cadence, and the win — bigger bundles under backpressure, lower
+latency when idle — is the same one the AdCom paper demonstrates.
 """
 
 from __future__ import annotations
@@ -23,92 +23,14 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
-from ..workdirs import fresh_workdir
 from .controller import BandController, TriggerControllerListener
 
 
 @dataclass
 class RunnerReport:
     intervals: list[int] = field(default_factory=list)
-    restarts: int = 0
     decisions: list = field(default_factory=list)
     batches_observed: int = 0
-
-
-class AdaptiveQueryRunner:
-    """Run a streaming query under band control.
-
-    build(writer-config) contract: a callable (trigger_ms, checkpoint_dir) ->
-    started StreamingQuery. The runner polls recentProgress (the in-process
-    stand-in for the MQTT signal topic), feeds the controller, and restarts
-    the query when a decision changes the interval."""
-
-    def __init__(
-        self,
-        start_query: Callable[[int, str], "object"],
-        controller: BandController | None = None,
-        decision_period_s: float = 2.0,
-        checkpoint_dir: str | None = None,
-    ):
-        self.start_query = start_query
-        self.controller = controller or BandController()
-        self.listener = TriggerControllerListener(
-            self.controller,
-            trigger_ms_getter=lambda: self.controller.interval_ms,
-            period_s=decision_period_s,
-        )
-        self.checkpoint_dir = checkpoint_dir or fresh_workdir("adcom_ckpt_")
-        self.report = RunnerReport()
-
-    def run_for(self, duration_s: float, poll_s: float = 0.25) -> RunnerReport:
-        rep = self.report
-        rep.intervals.append(self.controller.interval_ms)
-        query = self.start_query(self.controller.interval_ms, self.checkpoint_dir)
-        seen_batches: set[int] = set()
-        deadline = time.monotonic() + duration_s
-        try:
-            while time.monotonic() < deadline:
-                time.sleep(poll_s)
-                # cheap peek first: recentProgress round-trips the whole
-                # retained-progress buffer (up to 100 JSON documents) through
-                # py4j per call; lastProgress is one document, and if ITS
-                # batch has been seen, nothing new exists to fetch
-                last = query.lastProgress
-                if last is not None and last["batchId"] in seen_batches:
-                    continue
-                decision = None
-                for p in query.recentProgress:
-                    bid = p["batchId"]
-                    if bid in seen_batches:
-                        continue
-                    seen_batches.add(bid)
-                    dur = (p.get("durationMs") or {}).get("triggerExecution")
-                    if dur is None:
-                        continue
-                    rep.batches_observed += 1
-                    d = self.listener.observe_progress(float(dur))
-                    if d is not None:
-                        decision = d
-                if decision is not None:
-                    rep.decisions.append(decision)
-                    if decision.changed:
-                        query.stop()
-                        seen_batches.clear()
-                        rep.restarts += 1
-                        rep.intervals.append(decision.interval_ms)
-                        query = self.start_query(decision.interval_ms, self.checkpoint_dir)
-        finally:
-            # drain one flush before stopping: if the deadline lands right
-            # after a restart, the fresh query may not have committed a
-            # batch yet and its sink would otherwise end the run empty
-            # (a memory sink in complete mode re-registers an EMPTY table at
-            # query start, so stopping pre-commit would lose the snapshot —
-            # 30 s covers checkpoint recovery under load)
-            drain = time.monotonic() + 30
-            while time.monotonic() < drain and not query.recentProgress:
-                time.sleep(poll_s)
-            query.stop()
-        return rep
 
 
 class SelfPacedAdaptiveRunner:
@@ -119,11 +41,10 @@ class SelfPacedAdaptiveRunner:
 
     This is the in-flight parity path to the reference's per-subtask MQTT
     listener swapping the live timer (PreAggregateProcTimeListener.java:
-    67-109); `AdaptiveQueryRunner` above is the restart path. Trade-offs:
-    pacing occupies the stream's micro-batch thread (fine: between flushes
-    the engine would idle anyway) and the effective interval can never be
-    shorter than the batch's own duration — exactly the reference's
-    semantics, where a slow flush delays the next timer.
+    67-109). Trade-offs: pacing occupies the stream's micro-batch thread
+    (fine: between flushes the engine would idle anyway) and the effective
+    interval can never be shorter than the batch's own duration — exactly
+    the reference's semantics, where a slow flush delays the next timer.
     """
 
     def __init__(
@@ -157,12 +78,12 @@ class SelfPacedAdaptiveRunner:
         The duration fed to the controller is entry-to-entry: the batch body
         PLUS the engine gap since the previous batch ended (micro-batch
         planning, source listing, offset/commit work). That is the same
-        signal definition the restart runner reads from the engine's
-        durationMs.triggerExecution — measuring only the body under-reports
-        utilization by exactly the per-batch fixed costs, and on a box where
-        those costs rival the flush work the controller then converges BELOW
-        the natural batch cadence, where pacing is a no-op and the bundle
-        differential reads as 1.0 (round-13 finding, BENCH_HISTORY).
+        signal definition as the engine's durationMs.triggerExecution —
+        measuring only the body under-reports utilization by exactly the
+        per-batch fixed costs, and on a box where those costs rival the
+        flush work the controller then converges BELOW the natural batch
+        cadence, where pacing is a no-op and the bundle differential reads
+        as 1.0 (round-13 finding, BENCH_HISTORY).
 
         Sparse-source guard (round-13 verdict): on a feed with arrival gaps,
         an EMPTY batch's entry-to-entry duration is idle waiting, not busy

@@ -31,9 +31,10 @@ Components:
     QueryProgressEvent into the controller (stands in for the MQTT
     signal/parameter topics — same topology: per-task signals -> central
     decision -> new parameter, no external broker needed).
-  - AdaptiveQueryRunner (streaming/adaptive.py): applies interval changes by
-    restarting the query from its checkpoint (trigger is immutable on a live
-    query in the public API; restart is exactly-once under checkpointing).
+  - SelfPacedAdaptiveRunner (streaming/adaptive.py): applies interval
+    changes to the live query by pacing inside its foreachBatch (trigger is
+    immutable on a live query in the public API), effective at the next
+    batch with no restart.
 """
 
 from __future__ import annotations
@@ -225,7 +226,7 @@ class TriggerControllerListener:
             if decision.changed:
                 # anti-windup: every sample in the window is a utilization
                 # computed against the OLD interval. When the decision period
-                # is shorter than the window (both runners decide every
+                # is shorter than the window (the paced runner decides every
                 # 0.5-3 s against a 120 s window), re-consuming them would
                 # step the same direction every period until the floor/
                 # ceiling — integral windup. The reference sidesteps this

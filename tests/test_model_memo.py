@@ -79,3 +79,36 @@ def test_warm_build_starts_no_job_and_rewrite_retrains(spark, sf_dir, tmp_path, 
     assert w1 != w0
     assert w1 == weights(spark, work, fresh=True)
     assert _build_jobs(spark, name, work, "rewritten-warm") == 0
+
+
+def _last_job_id(sc) -> int:
+    """Highest job id in Spark's status store, -1 before any job. Job ids
+    are dense and increasing, so the jobs a call starts are the ids after
+    the one read before it."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc._jsc.sc().statusStore().jobsList(None)  # newest first
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
+def test_pool_thread_jobs_count_toward_the_callers_group(spark, sf_dir, tmp_path):
+    """q196's codebooks train on a thread pool. Every pool task inherits the
+    caller's job group, so a cold _pq_books call's group holds every job
+    the status store saw it start — not just the main thread's."""
+    from flink_adcom_spark.queries.similarity import _pq_books
+
+    work = str(tmp_path / "sf")
+    os.makedirs(work)
+    shutil.copyfile(
+        os.path.join(sf_dir, "embeddings.parquet"), os.path.join(work, "embeddings.parquet")
+    )
+    sc = spark.sparkContext
+    group = "model-memo:pq_books:cold"
+    first = _last_job_id(sc) + 1
+    sc.setJobGroup(group, "pq_books")
+    try:
+        _pq_books(spark, work)
+    finally:
+        sc._jsc.clearJobGroup()
+    started = list(range(first, _last_job_id(sc) + 1))
+    assert len(started) > 1
+    assert sorted(sc.statusTracker().getJobIdsForGroup(group)) == started

@@ -1398,3 +1398,35 @@ def test_media_caption_gate_kill_recover_exactly_once(spark, sf_dir, tmp_path):
         for r in media_caption_gate_rows(docs).select(*cols).collect()
     }
     assert got == want
+
+
+def test_epoch_sink_replay_is_idempotent(spark, tmp_path):
+    """The idempotent-epoch law every epoch writer shares, checked on static
+    DataFrames with no stream: an epoch replayed under the same batch_id
+    leaves exactly one copy in its partition, a new batch_id adds its own
+    partition, and the stored rows are the body's output plus batch_id."""
+    out = str(tmp_path / "epochs")
+
+    def body(df):
+        return df.filter(F.col("k") % 2 == 0).withColumn("v", F.col("k") * 10)
+
+    def want(df, batch_id):
+        return _rowset(body(df).withColumn("batch_id", F.lit(batch_id)), cols)
+
+    cols = ["k", "v", "batch_id"]
+    first = spark.range(6).select(F.col("id").alias("k"))
+    second = spark.range(6, 10).select(F.col("id").alias("k"))
+    sink = jobs._epoch_sink(out, body)
+
+    sink(first, 3)
+    sink(first, 3)  # replay of epoch 3
+    stored = spark.read.parquet(out)
+    assert _rowset(stored, cols) == want(first, 3)
+
+    sink(second, 4)
+    stored = spark.read.parquet(out)
+    parts = sorted(n for n in os.listdir(out) if n.startswith("batch_id="))
+    assert parts == ["batch_id=3", "batch_id=4"]
+    assert _rowset(stored.filter("batch_id = 3"), cols) == want(first, 3)
+    assert _rowset(stored.filter("batch_id = 4"), cols) == want(second, 4)
+    assert _rowset(stored, cols) == sorted(want(first, 3) + want(second, 4))
