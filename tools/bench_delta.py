@@ -45,11 +45,6 @@ def _extract(data: dict) -> tuple[dict, bool]:
             data = {"queries": {k: float(v) for k, v in pairs}} if pairs else {}
         else:
             data = {}
-    # a full-record shape (BENCH_FULL.json, or a fresh local run) carries
-    # both raw and per-query-normalized maps — prefer the normalized one,
-    # which is what the compact driver line publishes for r13+
-    if isinstance(data.get("queries_norm"), dict):
-        data = {**data, "queries": data["queries_norm"], "per_query_norm": True}
     if not data.get("queries"):
         crashed = True
     return data, crashed
@@ -98,54 +93,21 @@ def main() -> None:
         "not in that round's headline set. A `✗` column is a round whose bench",
         "CRASHED (driver rc != 0): it has no numbers and the delta column skips",
         "it — each round is compared against the last round that actually ran.",
-        "Delta compares the last two live columns (negative = faster), after",
-        "dividing each by its round's `load_factor` (the fixed-canary machine-",
-        "load estimate bench.py records since r7; rounds without one use 1.0),",
-        "so machine-load inflation does not read as a plan regression. A `~`",
-        "prefix marks a delta where exactly one compared round lacks a",
-        "load_factor (raw vs normalized — treat as indicative only).",
-        "r13+ rounds publish PER-QUERY-normalized seconds directly (bench.py",
-        "interleaves a mini canary after each query; raw seconds live in that",
-        "round's BENCH_FULL.json) — their columns are used as-is, not",
-        "re-divided.",
+        "Delta compares the last two live columns (negative = faster) in the",
+        "seconds each round published.",
         "",
-        "| query | " + " | ".join(heads) + " | delta (load-norm) |",
+        "| query | " + " | ".join(heads) + " | delta |",
         "|---|" + "---|" * (len(tags) + 1),
     ]
-
-    def has_lf(tag: str) -> bool:
-        # a per_query_norm round publishes ALREADY-normalized queries
-        # (bench.py r13+): treat it as load-corrected, never re-divide
-        if rounds[tag].get("per_query_norm"):
-            return True
-        lf = rounds[tag].get("load_factor")
-        return isinstance(lf, (int, float)) and lf > 0
-
-    def norm(tag: str, v: float) -> float:
-        if rounds[tag].get("per_query_norm"):
-            return v
-        return v / rounds[tag]["load_factor"] if has_lf(tag) else v
 
     for q in names:
         cells = []
         for t in tags:
             v = rounds[t].get("queries", {}).get(q)
             cells.append(f"{v:.3f}" if isinstance(v, (int, float)) else ("✗" if t in crashed else "—"))
-        lvals = [
-            (t, rounds[t].get("queries", {}).get(q)) for t in live
-        ]
-        lvals = [(t, v) for t, v in lvals if isinstance(v, (int, float))]
-        if len(lvals) >= 2:
-            (ta, va), (tb, vb) = lvals[-2], lvals[-1]
-            delta = f"{norm(tb, vb) - norm(ta, va):+.3f}"
-            # exactly one side normalized -> the delta mixes a raw (possibly
-            # load-inflated) time with a load-corrected one; mark it so a
-            # cross-boundary comparison (pre-canary vs post-canary round)
-            # never reads as a clean regression/improvement.
-            if has_lf(ta) != has_lf(tb):
-                delta = f"~{delta}"
-        else:
-            delta = "—"
+        lvals = [rounds[t].get("queries", {}).get(q) for t in live]
+        lvals = [v for v in lvals if isinstance(v, (int, float))]
+        delta = f"{lvals[-1] - lvals[-2]:+.3f}" if len(lvals) >= 2 else "—"
         lines.append(f"| {q} | " + " | ".join(cells) + f" | {delta} |")
     lines.append("")
     lines.append(
@@ -164,12 +126,6 @@ def main() -> None:
     lines.append(
         "| stream rows/s | "
         + " | ".join(f"{v:,}" if isinstance(v, int) else "—" for v in sr)
-        + " | |"
-    )
-    lf = [rounds[t].get("load_factor") for t in tags]
-    lines.append(
-        "| load factor | "
-        + " | ".join(f"{v:.2f}" if isinstance(v, (int, float)) else "—" for v in lf)
         + " | |"
     )
     out = os.path.join(ROOT, "BENCH_HISTORY.md")
