@@ -14,6 +14,7 @@ scale analysis and the reference citation:
         salted_agg, salted_count_distinct,      # hot-key aggregation
         salted_top_k,                           # exact per-key top-k fold
         l2_normalize, quantize_int8,            # vector prep
+        cosine, norm, pair_cosine,              # the exact-cosine law
         write_bucketed, upsert_partitions,      # pay-the-shuffle-once layouts
     )
 """
@@ -37,6 +38,7 @@ from .multimodal import (  # noqa: F401
     resize_images,
     sample_frames,
 )
+from .pairdots import cosine, norm, pair_cosine  # noqa: F401
 from .rangejoin import bucketed_range_join  # noqa: F401
 from .skew import (  # noqa: F401
     salted_agg,
@@ -51,7 +53,6 @@ from .storage import (  # noqa: F401
     write_partitioned,
 )
 from .vectors import (  # noqa: F401
-    cosine_scores_arrow,
     dequantize_int8,
     l2_normalize,
     quantize_int8,

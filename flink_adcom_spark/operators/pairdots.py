@@ -1,95 +1,167 @@
-"""Exact pair dot products via a once-per-row Arrow kernel (guide §4.2/§4.5).
+"""The one exact-cosine law of the similarity family, in two forms.
 
-The exact-cosine pair joins evaluate an interpreted HOF fold
-(`aggregate(zip_with(a, b, (x, y) -> x * y), 0D, (acc, x) -> acc + x)`) once
-per candidate PAIR — ~90 us of CodegenFallback evaluation each, the largest
-remaining executor cost of the similarity family (r14 measured it
-irreducible by unrolling, pre-casting, and a per-pair mapInArrow kernel:
-that prototype was bit-identical but transfer-bound, because both 64-double
-vectors crossed the Arrow boundary once per pair, which costs what the fold
-costs).
+The law: ``cosine(a, b) = round(dot(a, b) / (|a| * |b|), 6)``, where
+``dot`` is the left fold ``((0.0 + a0*b0) + a1*b1) + ...`` in index order
+and ``|v|`` is the square root of the same fold over ``v``'s squares. The
+DuckDB oracles compute the identical doubles; rounding to 6 decimals
+before any rank or threshold keeps summation-order noise (~1e-15) from
+flipping a result.
 
-This operator restructures WHERE the vectors cross the boundary: the two
-sides of the similarity join are COGROUPED on their blocking key (the LSH
-bucket), so each vector crosses once per (row, probed bucket) instead of
-once per pair — |pairs| x 128 doubles of transfer becomes
-(|left| + |right|) x 64 per bucket — and the kernel computes the group's
-full dot matrix in NumPy with the IDENTICAL left-fold addition chain:
+Two forms compute it:
 
-    acc = zeros((nl, nr)); for i ascending: acc[j, k] += Q[j, i] * D[k, i]
+- **Row form.** `norm(v)` and `cosine(a, an, b, bn)` are Column
+  expressions (`aggregate` over `zip_with`), evaluated once per row of
+  whatever relation holds the pair. They take names or Columns, so a
+  `transform` over a literal matrix (q169) can call them per element.
+- **Blocked form.** `pair_cosine(left, right, on, ...)` cogroups two
+  frames on a blocking key (LSH bucket, k-means cluster, multiprobe
+  bucket) and computes each group's full dot matrix in one NumPy kernel.
+  Each vector crosses the Arrow boundary once per group instead of once
+  per pair, which is AdCom's combine-before-the-shuffle rule applied to a
+  pair join. The kernel keeps the fold's exact addition chain:
 
-Each acc element sees exactly ((0.0 + p0) + p1) + ... in index order —
-np.float64 add/mul are IEEE-754 binary64, the same operations the JVM fold
-performs, so dots are bit-identical by construction (the r14 prototype
-proved this equivalence on all 180,470 q135 pairs; the oracle hash gate
-re-proves it per round). Division and ROUND(..., 6) stay on the Spark side
-(Spark's HALF_UP rounding is not NumPy's).
+      acc = zeros((nl, nr)); for i ascending: acc[j, k] += Q[j, i] * D[k, i]
 
-Scale shape: group volume is bounded by bucket occupancy (the derived-bits
-contract pins expected occupancy at ~LSH_TARGET_BUCKET), bucket count grows
-linearly with the corpus, and the cogroup shuffle carries each side once —
-strictly fewer bytes than the equi-join it replaces, which shipped the same
-rows and then re-evaluated the fold per joined pair.
+  so every element sees ``((0.0 + p0) + p1) + ...`` in index order with
+  IEEE-754 binary64 multiply and add, the operations the JVM fold
+  performs: dots are bit-identical by construction. A matmul would sum
+  pairwise and drift the low bits. Division and ROUND(..., 6) stay on the
+  Spark side (Spark's HALF_UP rounding is not NumPy's).
+
+Which form a site uses is decided by its join's shape. A corpus x corpus
+join on a blocking key uses the blocked form: q51 and the q53/q164
+near-dup pairs (bucket), q135 (probe bucket against home bucket), q112 and
+q156 (cluster). A join with one broadcast-bounded side (query set,
+centroid table, literal matrix) or a fixed pair list (rescore pool,
+deduped candidates) uses the row form: q50, q56, q88, q109, q156b, q169,
+q171, q194 and the IVF probe/search. Measured at sf0.1 on 4 vCPUs (noop
+sink, min of 5, two rounds; every variant's result hash equal):
+
+    q51  bucket self-join       fold 0.69/0.73 s   blocked 0.48/0.49 s
+    q112 cluster self-join      fold 3.12/3.21 s   blocked 0.73/0.79 s
+    q50  broadcast queries      fold 0.35-0.48 s   blocked 0.48-0.63 s
+    q109 rescore pool           fold 0.72/0.74 s   blocked 0.93/0.97 s
+
+(the blocked q50 replicated every query to each key; the blocked q109
+keyed the pool on q_id). The block law is the one of *Time Series
+Similarity Search for Streaming Data in Distributed Systems* (EDBT 2019):
+exact search inside blocks, no pair ever compared across blocks.
+
+Robustness: rows with a NULL key are dropped on both sides, as the
+equi-join drops them, so the row multiset is the equi-join's. A group
+whose nl x nr exceeds MAX_GROUP_PAIRS raises a ValueError naming the key
+and both sizes instead of exhausting an executor's memory: a hot bucket
+is a blocking failure to fix upstream (more bits, more clusters), not a
+matrix to page through.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+# largest nl x nr one group may produce: 16.7M pairs, ~130 MB per dense
+# float64 matrix in the Python worker
+MAX_GROUP_PAIRS = 1 << 24
 
-def bucket_pair_dots(
+
+def _col(c: Column | str) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
+def norm(v: Column | str) -> Column:
+    """L2 norm of a double array: sqrt of the ascending fold of squares."""
+    return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+def _round_cosine(dot: Column, an: Column | str, bn: Column | str) -> Column:
+    return F.round(dot / (_col(an) * _col(bn)), 6)
+
+
+def cosine(a: Column | str, an: Column | str, b: Column | str, bn: Column | str) -> Column:
+    """Row form: round(dot(a, b) / (an * bn), 6) with the ascending fold."""
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+    return _round_cosine(dot, an, bn)
+
+
+def pair_cosine(
     left: DataFrame,
     right: DataFrame,
-    key_left: str,
-    key_right: str,
-    vec_left: str,
-    vec_right: str,
-    carry_left: list[str],
-    carry_right: list[str],
-    dot_col: str = "dot",
+    on: str | tuple[str, str],
+    left_cols: dict[str, str],
+    right_cols: dict[str, str],
 ) -> DataFrame:
-    """All (left, right) pairs within each bucket, with the exact fold dot.
+    """Blocked form: every (left, right) pair with equal non-NULL keys.
 
-    Emits one row per pair in each cogroup: the carried left columns, the
-    carried right columns, and `dot_col` = the left-fold dot product of the
-    two vector columns. Row multiset is identical to
-    ``left.join(right, F.col(key_left) == F.col(key_right))`` + per-pair
-    fold; only the execution strategy differs.
+    Both frames carry the vector frame's `v` (array<double>) and `nrm`.
+    `on` names the key column of both frames, or (left key, right key).
+    `left_cols` / `right_cols` map carried source columns to output names;
+    a self-join passes one frame twice and renames here. Emits the carried
+    columns and `cosine`; the row multiset is that of
+    ``left.join(right, left[kl] == right[kr])`` + ``cosine(...)``, with
+    bit-identical cosines.
     """
     import numpy as np
     import pandas as pd
 
-    lf = {f.name: f for f in left.schema.fields}
-    rf = {f.name: f for f in right.schema.fields}
-    out_schema = StructType(
-        [lf[c] for c in carry_left]
-        + [rf[c] for c in carry_right]
-        + [StructField(dot_col, DoubleType(), False)]
-    )
-    out_cols = list(carry_left) + list(carry_right) + [dot_col]
+    key_l, key_r = (on, on) if isinstance(on, str) else on
+    limit = MAX_GROUP_PAIRS
 
-    def kernel(lpdf: "pd.DataFrame", rpdf: "pd.DataFrame") -> "pd.DataFrame":
+    def side(df: DataFrame, key: str, cols: dict[str, str], tag: str) -> DataFrame:
+        return df.where(F.col(key).isNotNull()).select(
+            F.col(key).alias("_k"),
+            F.col("v").alias(f"_{tag}v"),
+            F.col("nrm").alias(f"_{tag}n"),
+            *[F.col(src).alias(out) for src, out in cols.items()],
+        )
+
+    lside = side(left, key_l, left_cols, "l")
+    rside = side(right, key_r, right_cols, "r")
+    lf = {f.name: f for f in lside.schema.fields}
+    rf = {f.name: f for f in rside.schema.fields}
+    carry_l, carry_r = list(left_cols.values()), list(right_cols.values())
+    out_schema = StructType(
+        [lf[c] for c in carry_l + ["_ln"]]
+        + [rf[c] for c in carry_r + ["_rn"]]
+        + [StructField("_dot", DoubleType(), False)]
+    )
+    out_cols = out_schema.fieldNames()
+
+    def kernel(key: tuple, lpdf: "pd.DataFrame", rpdf: "pd.DataFrame") -> "pd.DataFrame":
         nl, nr = len(lpdf), len(rpdf)
         if nl == 0 or nr == 0:
             return pd.DataFrame(columns=out_cols)
-        q = np.stack(lpdf[vec_left].to_numpy())
-        d = np.stack(rpdf[vec_right].to_numpy())
+        if nl * nr > limit:
+            raise ValueError(
+                f"pair_cosine: group {key[0]} has nl={nl} x nr={nr} = "
+                f"{nl * nr} pairs > MAX_GROUP_PAIRS={limit}"
+            )
+        q = np.stack(lpdf["_lv"].to_numpy())
+        d = np.stack(rpdf["_rv"].to_numpy())
         acc = np.zeros((nl, nr))
+        term = np.empty((nl, nr))
         # ascending-i fold: per element the exact (((0 + p0) + p1) + ...)
         # chain of aggregate(zip_with(...)) — do NOT vectorize into a
         # matmul, whose pairwise/blocked summation changes the addition
         # order and drifts the low bits
         for i in range(q.shape[1]):
-            acc += np.outer(q[:, i], d[:, i])
-        data = {c: np.repeat(lpdf[c].to_numpy(), nr) for c in carry_left}
-        for c in carry_right:
+            np.multiply(q[:, i, None], d[None, :, i], out=term)
+            acc += term
+        data = {c: np.repeat(lpdf[c].to_numpy(), nr) for c in carry_l + ["_ln"]}
+        for c in carry_r + ["_rn"]:
             data[c] = np.tile(rpdf[c].to_numpy(), nl)
-        data[dot_col] = acc.ravel()
+        data["_dot"] = acc.ravel()
         return pd.DataFrame(data)
 
     return (
-        left.groupBy(key_left)
-        .cogroup(right.groupBy(key_right))
+        lside.groupBy("_k")
+        .cogroup(rside.groupBy("_k"))
         .applyInPandas(kernel, schema=out_schema)
+        .select(
+            *carry_l, *carry_r,
+            _round_cosine(F.col("_dot"), "_ln", "_rn").alias("cosine"),
+        )
     )

@@ -16,17 +16,15 @@ no Python in the hot path).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def _norm(vec: Column) -> Column:
-    return F.sqrt(F.aggregate(vec, F.lit(0.0), lambda acc, x: acc + x * x))
+from .pairdots import norm
 
 
 def l2_normalize(vec: Column) -> Column:
     """vec / ||vec||; zero vectors stay zero."""
-    n = _norm(vec)
+    n = norm(vec)
     return F.when(n == 0.0, vec).otherwise(F.transform(vec, lambda x: x / n))
 
 
@@ -46,106 +44,3 @@ def dequantize_int8(qstruct: Column) -> Column:
     """Inverse of quantize_int8 (lossy: component error <= scale/2)."""
     scale = qstruct.getField("scale")
     return F.transform(qstruct.getField("q"), lambda x: x.cast("double") * scale)
-
-
-def cosine_scores_arrow(
-    corpus: DataFrame,
-    queries: list[tuple[int, list[float]]],
-    vec_col: str = "v",
-    id_col: str = "vec_id",
-    per_partition_topk: int | None = None,
-) -> DataFrame:
-    """Arrow-batched brute-force cosine scoring: the vectorized-Pandas-UDF
-    alternative to the zip_with/aggregate HOF dot product (q50); queries
-    broadcast via closure, corpus streamed, no shuffle.
-
-    MEASURED (local[8], 20k rows, d=512): whole-stage-codegen HOF folds
-    beat this path at every size tried — 0.42s vs 0.59s at |Q|=256, 1.49s
-    vs 1.64s at |Q|=2048 all-pairs, and the per_partition_topk variant
-    (emit only each partition's local top-k per query via np.argpartition,
-    output partitions*k*|Q| rows instead of n*|Q|) was slower still at
-    this scale (7.6s) because the per-batch list->ndarray conversion, not
-    the transfer, dominates. The evidence-based guidance is therefore the
-    one the rest of this repo already follows: JVM HOF expressions are the
-    DEFAULT for vector math; this function is the TEMPLATE for scorers
-    that cannot be expressed as expressions at all (a real reranker model,
-    a compiled kernel), where the Arrow batching is the only way in, and
-    per_partition_topk keeps such a scorer's output bounded.
-
-    Note: numpy's pairwise summation accumulates in a different order than
-    the HOF fold, so scores agree only to float tolerance (~1e-12) — this
-    is the performance path, not the oracle path."""
-    import numpy as np
-    import pandas as pd
-
-    if not queries:
-        raise ValueError("queries must be non-empty")
-
-    q_ids = np.array([i for i, _ in queries], dtype=np.int64)
-    q_mat = np.array([v for _, v in queries], dtype=np.float64)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-
-    schema = f"{id_col} long, q_id long, cosine double"
-
-    def _cos(pdf):
-        ids = pdf[id_col].to_numpy()
-        mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-        nrm = np.sqrt((mat * mat).sum(axis=1))
-        denom = np.outer(nrm, q_norm)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return ids, np.where(denom > 0.0, (mat @ q_mat.T) / denom, 0.0)
-
-    def score_all(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids, cos = _cos(pdf)
-            n, m = cos.shape
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(ids, m),
-                    "q_id": np.tile(q_ids, n),
-                    "cosine": cos.ravel(),
-                }
-            )
-
-    def score_topk(batches):
-        # TRUE per-partition reduction: every Arrow batch folds into a
-        # per-query (k, |Q|) candidate pool, yielded ONCE at partition end
-        # — output is k * |Q| rows per partition regardless of batch count.
-        # Each fold selects with (cosine desc, id asc) lexsort, so a tie
-        # group at the k boundary keeps its lowest ids deterministically —
-        # matching the (F.desc(cosine), F.asc(id)) convention downstream
-        # rankers use, even for exact-duplicate-vector corpora.
-        k = per_partition_topk
-        m = len(q_ids)
-        pool_cos = np.empty((0, m), dtype=np.float64)
-        pool_ids = np.empty((0, m), dtype=np.int64)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids, cos = _cos(pdf)
-            all_cos = np.vstack([pool_cos, cos])
-            all_ids = np.vstack([pool_ids, np.repeat(ids[:, None], m, axis=1)])
-            kk = min(k, all_cos.shape[0])
-            new_cos = np.empty((kk, m), dtype=np.float64)
-            new_ids = np.empty((kk, m), dtype=np.int64)
-            for j in range(m):
-                order = np.lexsort((all_ids[:, j], -all_cos[:, j]))[:kk]
-                new_cos[:, j] = all_cos[order, j]
-                new_ids[:, j] = all_ids[order, j]
-            pool_cos, pool_ids = new_cos, new_ids
-        if pool_cos.shape[0] == 0:
-            return
-        kk = pool_cos.shape[0]
-        cols = np.repeat(np.arange(m), kk)
-        yield pd.DataFrame(
-            {
-                id_col: pool_ids.ravel(order="F"),
-                "q_id": q_ids[cols],
-                "cosine": pool_cos.ravel(order="F"),
-            }
-        )
-
-    fn = score_all if per_partition_topk is None else score_topk
-    return corpus.select(id_col, vec_col).mapInPandas(fn, schema)

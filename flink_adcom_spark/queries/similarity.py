@@ -3,10 +3,13 @@
 Brute-force cosine top-k as the correctness baseline, a sign-LSH-bucketed
 variant as the scale path, and a per-label centroid rollup (array aggregation).
 
-All vector math uses JVM-side higher-order functions (zip_with / aggregate) on
-double-cast arrays — no Python in the loop. Cosines are rounded to 6 decimals
-on BOTH engines before any ordering/thresholding so summation-order noise
-(~1e-15) can't flip a rank or a filter.
+Every cosine follows the one law of operators/pairdots.py: the ascending
+fold over double-cast arrays, rounded to 6 decimals on BOTH engines before
+any ordering/thresholding so summation-order noise (~1e-15) can't flip a
+rank or a filter. Bounded-side joins and fixed pair lists evaluate it as a
+JVM column expression (`cosine`); blocked corpus x corpus joins evaluate it
+in pairdots' cogrouped NumPy kernel (`pair_cosine`), where the Python
+worker computes each block's dot matrix.
 
 Scale notes (100 TB): brute force is O(|Q|·N·d) with the query side broadcast —
 correct baseline, linear in N per query. The real scale path is q51's bucketed
@@ -21,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.pairdots import cosine, norm, pair_cosine
 from ..registry import query
 from ..tables import load_table, memo
 
@@ -28,13 +32,17 @@ N_QUERY_VECS = 20  # vec_id < 20 are the query workload
 TOP_K = 3
 
 
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embeddings with double-cast vector + L2 norm."""
-    e = load_table(spark, sf_dir, "embeddings")
+def _vectors(e: DataFrame) -> DataFrame:
+    """(vec_id, label, v, nrm): an embeddings-shaped frame with the vector
+    cast to array<double> and its L2 norm — the one vector frame every
+    similarity query reads."""
     v = F.transform("embedding", lambda x: x.cast("double"))
-    return e.select("vec_id", "label", v.alias("v")).withColumn(
-        "nrm", F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
-    )
+    return e.select("vec_id", "label", v.alias("v")).withColumn("nrm", norm("v"))
+
+
+def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The vector frame over the embeddings table."""
+    return _vectors(load_table(spark, sf_dir, "embeddings"))
 
 
 def _emb_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -49,17 +57,7 @@ def _emb_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     unwidened frame so their float summation order is untouched."""
     from ..tables import widen_scan
 
-    e = widen_scan(load_table(spark, sf_dir, "embeddings"))
-    v = F.transform("embedding", lambda x: x.cast("double"))
-    return e.select("vec_id", "label", v.alias("v")).withColumn(
-        "nrm", F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
-    )
-
-
-def _dot(a: str, b: str) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+    return _vectors(widen_scan(load_table(spark, sf_dir, "embeddings")))
 
 
 # DuckDB side: explode to (vec_id, i, val) rows, dot products via equi-join on i.
@@ -101,11 +99,10 @@ def q50_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
     d = e.select(F.col("vec_id").alias("n_id"), F.col("v").alias("dv"), F.col("nrm").alias("dn"))
-    cos = F.round(_dot("qv", "dv") / (F.col("qn") * F.col("dn")), 6)
     pairs = (
         F.broadcast(q)
         .join(d, F.col("q_id") != F.col("n_id"))
-        .withColumn("cosine", cos)
+        .withColumn("cosine", cosine("qv", "qn", "dv", "dn"))
         .select("q_id", "n_id", "cosine")
     )
     from pyspark.sql import Window
@@ -186,36 +183,22 @@ _BUCKET_SQL = " + ".join(
 )
 def q51_lsh_bucket_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Most-similar pair within each sign-LSH bucket (axis-aligned hyperplane
-    LSH on the first `bits` dims). The pair join is an equi-join on bucket —
-    the linear-scale ANN pattern; bucket count is DERIVED from corpus size
-    (_n_bucket_bits: 2x the corpus -> +1 bit) so per-bucket occupancy — and
-    the quadratic within-bucket pair work — stays ~constant at any N.
+    LSH on the first `bits` dims). The pair join is blocked on bucket
+    (pairdots.pair_cosine) — the linear-scale ANN pattern; bucket count is
+    DERIVED from corpus size (_n_bucket_bits: 2x the corpus -> +1 bit) so
+    per-bucket occupancy — and the quadratic within-bucket pair work —
+    stays ~constant at any N.
     The N-count job is one cheap scan (parquet row-group counts)."""
+    from pyspark.sql import Window
+
     e0 = _emb(spark, sf_dir)
     # memoized footer count (identical value to e0.count(); saves one
     # counting job per build — the bench builds each query 3x)
     bits = _n_bucket_bits(_emb_count(spark, sf_dir))
     e = e0.withColumn("bucket", _bucket_col(bits))
-    a = e.select(
-        F.col("bucket"),
-        F.col("vec_id").alias("vec_a"),
-        F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = e.select(
-        F.col("bucket").alias("bucket_b"),
-        F.col("vec_id").alias("vec_b"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = F.round(_dot("va", "vb") / (F.col("na") * F.col("nb")), 6)
-    pairs = (
-        a.join(b, (F.col("bucket") == F.col("bucket_b")) & (F.col("vec_a") < F.col("vec_b")))
-        .withColumn("cosine", cos)
-        .select("bucket", "vec_a", "vec_b", "cosine")
-    )
-    from pyspark.sql import Window
-
+    pairs = pair_cosine(
+        e, e, "bucket", {"bucket": "bucket", "vec_id": "vec_a"}, {"vec_id": "vec_b"}
+    ).filter(F.col("vec_a") < F.col("vec_b"))
     w = Window.partitionBy("bucket").orderBy(F.desc("cosine"), F.asc("vec_a"), F.asc("vec_b"))
     return (
         pairs.withColumn("rnk", F.row_number().over(w))
@@ -299,19 +282,11 @@ def _neardup_pairs_df(e0: DataFrame) -> DataFrame:
     """q53's Spark body over an arbitrary (vec_id, v, nrm) frame."""
     bits = _n_bucket_bits(e0.count())
     e = e0.withColumn("bucket", _bucket_col(bits))
-    a = e.select("bucket", F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
-    b = e.select(
-        F.col("bucket").alias("bucket_b"),
-        F.col("vec_id").alias("vec_b"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = F.round(_dot("va", "vb") / (F.col("na") * F.col("nb")), 6)
     return (
-        a.join(b, (F.col("bucket") == F.col("bucket_b")) & (F.col("vec_a") < F.col("vec_b")))
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= NEARDUP_COSINE)
-        .select("vec_a", "vec_b", "cosine")
+        pair_cosine(e, e, "bucket", {"vec_id": "vec_a"}, {"vec_id": "vec_b"})
+        .filter(
+            (F.col("vec_a") < F.col("vec_b")) & (F.col("cosine") >= NEARDUP_COSINE)
+        )
     )
 
 
@@ -364,11 +339,7 @@ def q164_embed_neardup_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = e.select("vec_id", "embedding", "label").union(
         planted.select("vec_id", "embedding", "label")
     )
-    v = F.transform("embedding", lambda x: x.cast("double"))
-    e0 = u.select("vec_id", "label", v.alias("v")).withColumn(
-        "nrm", F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
-    )
-    return _neardup_pairs_df(e0)
+    return _neardup_pairs_df(_vectors(u))
 
 
 # --- IVF (inverted-file) ANN search -------------------------------------------
@@ -454,10 +425,7 @@ def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "label",
                 F.transform("pairs", lambda p: p.cval).alias("cv"),
             )
-            .withColumn(
-                "cnrm",
-                F.sqrt(F.aggregate("cv", F.lit(0.0), lambda a, x: a + x * x)),
-            )
+            .withColumn("cnrm", norm("cv"))
         )
 
     return memo_relation(
@@ -475,10 +443,9 @@ def _ivf_probe(e: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
     qc = F.broadcast(q).crossJoin(F.broadcast(cent))
-    ccos = F.round(_dot("qv", "cv") / (F.col("qn") * F.col("cnrm")), 6)
     wq = Window.partitionBy("q_id").orderBy(F.desc("ccos"), F.asc("label"))
     return (
-        qc.withColumn("ccos", ccos)
+        qc.withColumn("ccos", cosine("qv", "qn", "cv", "cnrm"))
         .withColumn("crnk", F.row_number().over(wq))
         .filter(F.col("crnk") <= nprobe)
         .select("q_id", "qv", "qn", "label")
@@ -503,14 +470,9 @@ def _ivf_knn(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     e = _emb_wide(spark, sf_dir)  # vec_id, label, v, nrm
     probe = _ivf_probe(e, _ivf_cells(spark, sf_dir), nprobe)
     cand = F.broadcast(probe).join(e, "label").filter(F.col("vec_id") != F.col("q_id"))
-    cos = F.round(
-        F.aggregate(F.zip_with("qv", "v", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-        / (F.col("qn") * F.col("nrm")),
-        6,
-    )
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
     return (
-        cand.withColumn("cosine", cos)
+        cand.withColumn("cosine", cosine("qv", "qn", "v", "nrm"))
         .select("q_id", F.col("vec_id").alias("n_id"), "cosine")
         .withColumn("rnk", F.row_number().over(w).cast("int"))
         .filter(F.col("rnk") <= TOP_K)
@@ -561,11 +523,10 @@ def q56_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = e.select(F.col("vec_id").alias("n_id"), F.col("v").alias("dv"), F.col("nrm").alias("dn"))
     corpus = d.join(en_ids, "n_id")
-    cos = F.round(_dot("qv", "dv") / (F.col("qn") * F.col("dn")), 6)
     pairs = (
         F.broadcast(q)
         .join(corpus, F.col("q_id") != F.col("n_id"))
-        .withColumn("cosine", cos)
+        .withColumn("cosine", cosine("qv", "qn", "dv", "dn"))
         .select("q_id", "n_id", "cosine")
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
@@ -899,11 +860,10 @@ def q88_embed_neardup_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     va = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     vb = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    cos = F.round(_dot("va", "vb") / (F.col("na") * F.col("nb")), 6)
     return (
         cand.join(va, "vec_a")
         .join(vb, "vec_b")
-        .withColumn("cosine", cos)
+        .withColumn("cosine", cosine("va", "na", "vb", "nb"))
         .filter(F.col("cosine") >= NEARDUP_COSINE)
         .select("vec_a", "vec_b", "cosine")
     )
@@ -1098,7 +1058,7 @@ def q109_quantized_rescore_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "n_id",
         )
-        .withColumn("cosine", F.round(_dot("qv", "dv") / (F.col("qn") * F.col("dn")), 6))
+        .withColumn("cosine", cosine("qv", "qn", "dv", "dn"))
         .select("q_id", "n_id", "cosine")
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
@@ -1148,24 +1108,16 @@ def q112_semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: this is WHY SemDeDup clusters first — pairwise comparison
     happens only WITHIN clusters (q57's assignment, k centroids), so the
     candidate volume is sum(|cluster|^2) ~ N^2/k instead of N^2, and each
-    cluster's pair join is an independent shuffle partition. At 100 TB, k
-    grows with the corpus (k ~ sqrt(N) keeps per-cluster work flat) and the
-    pair join stays cluster-local (no cross-partition traffic)."""
+    cluster's pair block is one cogroup (pairdots.pair_cosine). At 100 TB,
+    k grows with the corpus (k ~ sqrt(N) keeps per-cluster work flat) and
+    the pair work stays cluster-local (no cross-partition traffic)."""
     assign = q57_kmeans(spark, sf_dir)  # vec_id, cluster
     e = _emb(spark, sf_dir).select("vec_id", "v", "nrm").join(assign, "vec_id")
-    a = e.select(
-        F.col("vec_id").alias("hi_id"), F.col("v").alias("av"),
-        F.col("nrm").alias("an"), "cluster",
-    )
-    b = e.select(
-        F.col("vec_id").alias("lo_id"), F.col("v").alias("bv"),
-        F.col("nrm").alias("bn"), F.col("cluster").alias("bcluster"),
-    )
-    cos = F.round(_dot("av", "bv") / (F.col("an") * F.col("bn")), 6)
     dom = (
-        a.join(b, (F.col("cluster") == F.col("bcluster")) & (F.col("lo_id") < F.col("hi_id")))
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= SEMDEDUP_COS)
+        pair_cosine(e, e, "cluster", {"vec_id": "hi_id"}, {"vec_id": "lo_id"})
+        .filter(
+            (F.col("lo_id") < F.col("hi_id")) & (F.col("cosine") >= SEMDEDUP_COS)
+        )
         .select(F.col("hi_id").alias("vec_id"))
         .distinct()
     )
@@ -1301,53 +1253,19 @@ def q135_bitext_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket").cast("int"),
         *[F.col("bucket").bitwiseXOR(F.lit(1 << i)).cast("int") for i in range(bits)],
     )
-    src = (
-        e.join(
-            F.broadcast(lng.filter(F.col("lang") == BITEXT_SRC_LANG)),
-            e.vec_id == F.col("doc_id"),
-        )
-        .select(
-            F.col("vec_id").alias("src_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-            F.explode(probes).alias("probe"),
-        )
-    )
-    cand = (
-        e.join(
-            F.broadcast(lng.filter(F.col("lang") != BITEXT_SRC_LANG)),
-            e.vec_id == F.col("doc_id"),
-        )
-        .select(
-            F.col("vec_id").alias("match_id"),
-            F.col("lang").alias("match_lang"),
-            F.col("v").alias("dv"),
-            F.col("nrm").alias("dn"),
-            F.col("bucket").cast("int").alias("cbucket"),
-        )
-    )
-    # pair dots via the cogrouped once-per-row Arrow kernel instead of a
-    # per-pair interpreted fold on the bucket equi-join (operators/pairdots;
-    # r15 — the r14 per-pair prototype was bit-identical but transfer-bound,
-    # this form moves each vector across the boundary once per probed
-    # bucket). Same pair multiset, bit-identical dots; divide + ROUND stay
-    # Spark-side, so cosine is the identical double.
-    from ..operators.pairdots import bucket_pair_dots
-
-    pairs = bucket_pair_dots(
-        src,
-        cand,
-        key_left="probe",
-        key_right="cbucket",
-        vec_left="qv",
-        vec_right="dv",
-        carry_left=["src_id", "qn"],
-        carry_right=["match_id", "match_lang", "dn"],
-    ).select(
-        "src_id",
-        "match_id",
-        "match_lang",
-        F.round(F.col("dot") / (F.col("qn") * F.col("dn")), 6).alias("cosine"),
+    src = e.join(
+        F.broadcast(lng.filter(F.col("lang") == BITEXT_SRC_LANG)),
+        e.vec_id == F.col("doc_id"),
+    ).select("vec_id", "v", "nrm", F.explode(probes).alias("probe"))
+    cand = e.join(
+        F.broadcast(lng.filter(F.col("lang") != BITEXT_SRC_LANG)),
+        e.vec_id == F.col("doc_id"),
+    ).select("vec_id", "lang", "v", "nrm", "bucket")
+    # blocked on (probe, home bucket): each vector crosses into the kernel
+    # once per probed bucket, not once per pair (operators/pairdots)
+    pairs = pair_cosine(
+        src, cand, ("probe", "bucket"),
+        {"vec_id": "src_id"}, {"vec_id": "match_id", "lang": "match_lang"},
     )
     from pyspark.sql import Window
 
@@ -1420,11 +1338,13 @@ def q156_contrastive_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins), matching a miner that skips unpaireable anchors.
 
     Scale shape: the quadratic work is CLUSTER-SCOPED exactly like q112
-    (sum |cluster|^2 ~ N^2/k, each cluster an independent shuffle
-    partition; k grows ~ sqrt(N) at scale to keep per-cluster work flat).
-    The rank-2 assignment is scan-side — one broadcast k*dim matrix, argmin
-    plus a position-masked second argmin, no shuffle
-    (operators/kmeans.py::assign_clusters_ranked). Cosines are rounded to
+    (sum |cluster|^2 ~ N^2/k, each cluster one cogroup block of
+    pairdots.pair_cosine; k grows ~ sqrt(N) at scale to keep per-cluster
+    work flat). The positive block is the full cluster matrix, not a
+    mirrored half: a.b and b.a are the same bits (the products commute,
+    the addition order is unchanged). The rank-2 assignment is scan-side
+    — one broadcast k*dim matrix, argmin plus a position-masked second
+    argmin, no shuffle (operators/kmeans.py::assign_clusters_ranked). Cosines are rounded to
     6 decimals on both engines before ranking (q50 discipline)."""
     from pyspark.sql import Window
 
@@ -1438,51 +1358,28 @@ def q156_contrastive_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     asg = assign_clusters_ranked(e, "v", centroids).localCheckpoint(eager=True)
 
-    a = asg.select(
-        F.col("vec_id").alias("anchor_id"), F.col("v").alias("av"),
-        F.col("nrm").alias("an"), "cluster", "cluster2",
-    )
-    b = asg.select(
-        F.col("vec_id").alias("cand_id"), F.col("v").alias("bv"),
-        F.col("nrm").alias("bn"), F.col("cluster").alias("bcluster"),
-    )
-    cos = F.round(_dot("av", "bv") / (F.col("an") * F.col("bn")), 6)
+    w = Window.partitionBy("anchor_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
 
-    w = Window.partitionBy("anchor_id").orderBy(F.desc("c"), F.asc("cand_id"))
-    # within-cluster pairs are SYMMETRIC: evaluate the 64-element dot fold
-    # once per unordered pair (anchor_id < cand_id) and mirror the scored
-    # row for the other anchor — halves the positive join's fold work (the
-    # per-pair HOF fold is the operator's dominant cost; the neg join below
-    # is inherently asymmetric and cannot share it)
-    half = (
-        a.join(
-            b,
-            (F.col("cluster") == F.col("bcluster"))
-            & (F.col("anchor_id") < F.col("cand_id")),
-        )
-        .withColumn("c", cos)
-        .select("anchor_id", "cand_id", "c")
-        .localCheckpoint(eager=False)
-    )
-    pos = (
-        half.unionByName(
-            half.select(
-                F.col("cand_id").alias("anchor_id"),
-                F.col("anchor_id").alias("cand_id"),
-                "c",
+    def best(key: str, out: str) -> DataFrame:
+        """Each anchor's most-similar OTHER vector among those whose own
+        cluster equals the anchor's `key` column (the self-exclusion only
+        bites for the positive: cluster2 never equals cluster)."""
+        return (
+            pair_cosine(
+                asg, asg, (key, "cluster"), {"vec_id": "anchor_id"}, {"vec_id": "cand_id"}
+            )
+            .filter(F.col("anchor_id") != F.col("cand_id"))
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select(
+                "anchor_id",
+                F.col("cand_id").alias(f"{out}_id"),
+                F.col("cosine").alias(f"{out}_cos"),
             )
         )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("anchor_id", F.col("cand_id").alias("pos_id"), F.col("c").alias("pos_cos"))
-    )
-    neg = (
-        a.join(b, F.col("cluster2") == F.col("bcluster"))
-        .withColumn("c", cos)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("anchor_id", F.col("cand_id").alias("neg_id"), F.col("c").alias("neg_cos"))
-    )
+
+    pos = best("cluster", "pos")
+    neg = best("cluster2", "neg")
     return pos.join(neg, "anchor_id").select(
         "anchor_id", "pos_id", "pos_cos", "neg_id", "neg_cos"
     )
@@ -1732,7 +1629,7 @@ def q156b_contrastive_pool(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "cand_id",
         )
-        .withColumn("c", F.round(_dot("av", "bv") / (F.col("an") * F.col("bn")), 6))
+        .withColumn("c", cosine("av", "an", "bv", "bn"))
         .select("anchor_id", "cand_id", "c")
     )
     w = Window.partitionBy("anchor_id").orderBy(F.desc("c"), F.asc("cand_id"))
@@ -2329,13 +2226,7 @@ def q194_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def topk(dims: int) -> DataFrame:
         vt = F.slice("v", 1, dims)
-        et = e.select(
-            "vec_id",
-            vt.alias("vt"),
-            F.sqrt(
-                F.aggregate(vt, F.lit(0.0), lambda acc, x: acc + x * x)
-            ).alias("nt"),
-        )
+        et = e.select("vec_id", vt.alias("vt"), norm(vt).alias("nt"))
         q = et.filter(F.col("vec_id") < N_QUERY_VECS).select(
             F.col("vec_id").alias("q_id"),
             F.col("vt").alias("qv"),
@@ -2346,12 +2237,11 @@ def q194_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vt").alias("dv"),
             F.col("nt").alias("dn"),
         )
-        cos = F.round(_dot("qv", "dv") / (F.col("qn") * F.col("dn")), 6)
         w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
         return (
             F.broadcast(q)
             .join(d, F.col("q_id") != F.col("n_id"))
-            .withColumn("cosine", cos)
+            .withColumn("cosine", cosine("qv", "qn", "dv", "dn"))
             .withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= TOP_K)
             .select("q_id", "n_id")
@@ -2435,13 +2325,7 @@ def q169_embed_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     qnrm = double_array_lit([r["nrm"] for r in ev])
     corpus = e.filter(F.col("vec_id") >= N_QUERY_VECS)
     dots = F.transform(
-        qmat,
-        lambda q, i: F.round(
-            F.aggregate(F.zip_with("v", q, lambda x, y: x * y),
-                        F.lit(0.0), lambda acc, x: acc + x)
-            / (F.col("nrm") * F.element_at(qnrm, i + 1)),
-            6,
-        ),
+        qmat, lambda q, i: cosine("v", "nrm", q, F.element_at(qnrm, i + 1))
     )
     return corpus.select(
         "vec_id",
@@ -2631,10 +2515,7 @@ def q229_embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one scan with a per-vector fold (zero exchanges before
     the |labels|-row rollup) — the same fold shape as q169's
     decontamination scan."""
-    from ..operators.vectors import _norm
-
-    e = _emb(spark, sf_dir)
-    n = e.select("label", _norm(F.col("v")).alias("nrm"))
+    n = _emb(spark, sf_dir).select("label", "nrm")
     return n.groupBy("label").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_vecs"),
         F.round(F.avg("nrm"), 6).alias("mean_norm"),

@@ -1641,15 +1641,13 @@ def q157_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     not corpus-sized; df and the (n_docs, avgdl) scalars are broadcast; the
     only corpus-wide aggregates are the doc-length rollup (map-side
     combined, one shuffle on doc_id) and its scalar reduction. The global
-    top-k is TakeOrdered-sized (BM25_TOP rows per partition)."""
+    top-k is one TakeOrderedAndProject (BM25_TOP rows per partition), and
+    only its BM25_TOP rows are ranked."""
     from pyspark.sql import Window
 
-    sc = _bm25_scores(spark, sf_dir)
-    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        sc.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= BM25_TOP)
-    )
+    order = [F.desc("score"), F.asc("doc_id")]
+    top = _bm25_scores(spark, sf_dir).orderBy(*order).limit(BM25_TOP)
+    return top.withColumn("rnk", F.row_number().over(Window.orderBy(*order)).cast("int"))
 
 
 def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2459,11 +2457,14 @@ def q170_symspell_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- hybrid retrieval: BM25 recall + embedding rerank ---------------------------
-# The exploded-embedding and norm CTEs come from similarity.py — the ONE
-# definition its 10+ vector oracles share, so a rounding/cast fix there can
-# never leave q171's cosine inputs behind.
+# The exploded-embedding and norm CTEs and the vector frame come from
+# similarity.py, the cosine from operators/pairdots.py — the ONE definition
+# every vector query shares, so a rounding/cast fix there can never leave
+# q171's cosine inputs behind.
+from ..operators.pairdots import cosine  # noqa: E402
 from .similarity import _N_SQL as _N_SQL_EMB  # noqa: E402
 from .similarity import _X_SQL as _X_SQL_EMB  # noqa: E402
+from .similarity import _vectors  # noqa: E402
 
 RERANK_POOL = 50   # BM25 candidate pool fed to the vector stage
 HYBRID_TOP = 10
@@ -2527,8 +2528,6 @@ def q171_hybrid_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of brute-forcing cosine over everything."""
     from pyspark.sql import Window
 
-    from ..tables import load_table as _lt
-
     sc = _bm25_scores(spark, sf_dir)
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     pool = (
@@ -2539,11 +2538,7 @@ def q171_hybrid_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # — without this the whole BM25 chain re-derives for each consumer
         .localCheckpoint(eager=False)
     )
-    e = _lt(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    ).withColumn(
-        "nrm", F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
-    )
+    e = _vectors(load_table(spark, sf_dir, "embeddings"))
     q = (
         e.filter(F.col("vec_id") == RERANK_QUERY_VEC)
         .select("v", "nrm")
@@ -2552,12 +2547,7 @@ def q171_hybrid_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.fastlit import double_array_lit
 
     qv, qnrm = double_array_lit(q[0]["v"]), F.lit(float(q[0]["nrm"]))
-    cos = F.round(
-        F.aggregate(F.zip_with("v", qv, lambda x, y: x * y),
-                    F.lit(0.0), lambda acc, x: acc + x)
-        / (F.col("nrm") * qnrm),
-        6,
-    )
+    cos = cosine("v", "nrm", qv, qnrm)
     vec = e.filter(F.col("vec_id") != RERANK_QUERY_VEC).select(
         F.col("vec_id").alias("doc_id"), cos.alias("cos")
     )

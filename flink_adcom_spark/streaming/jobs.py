@@ -819,6 +819,7 @@ def ivfpq_search_writer(
     checkpoint: str | None = None, **kw
 ):
     """The unstarted writer behind streaming_ivfpq_search_materialize."""
+    from ..operators.pairdots import norm
     from ..queries.similarity import (
         IVFPQ_NPROBE, PQ_M, PQ_SUB, _ivf_probe, adc_topk, pq_decode_codes,
     )
@@ -827,10 +828,7 @@ def ivfpq_search_writer(
     x = pq_decode_codes(spark.read.parquet(index_path), extra_cols=("label",))
 
     def body(batch_df: DataFrame) -> DataFrame:
-        e = _double_vecs(batch_df).withColumn(
-            "nrm",
-            F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x)),
-        )
+        e = _double_vecs(batch_df).withColumn("nrm", norm("v"))
         probe = _ivf_probe(e, cent, IVFPQ_NPROBE)
         qs = probe.select(
             "q_id",

@@ -101,3 +101,78 @@ def test_streaming_writer_law_lives_in_its_helpers():
         assert [name for name, _ in sites[law]] == [helper], (
             f"{law} must be spelled once, in jobs.{helper}; found at {sites[law]}"
         )
+
+
+# the exact-cosine law is spelled once, in operators/pairdots.py
+PAIRDOTS = os.path.join(PKG, "operators", "pairdots.py")
+
+
+def _names(args: ast.arguments) -> list[str]:
+    return [a.arg for a in args.args]
+
+
+def _is_dot_fold(call: ast.Call) -> bool:
+    """zip_with(a, b, (x, y) -> x * y): the element step of a dot fold."""
+    f = call.func
+    name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+    if name != "zip_with":
+        return False
+    for lam in call.args:
+        if isinstance(lam, ast.Lambda) and len(_names(lam.args)) == 2:
+            b = lam.body
+            if (
+                isinstance(b, ast.BinOp) and isinstance(b.op, ast.Mult)
+                and {getattr(b.left, "id", None), getattr(b.right, "id", None)}
+                == set(_names(lam.args))
+            ):
+                return True
+    return False
+
+
+def _is_norm_fold(lam: ast.Lambda) -> bool:
+    """(acc, x) -> acc + x * x: the step of a sum-of-squares fold."""
+    names = _names(lam.args)
+    b = lam.body
+    return (
+        len(names) == 2
+        and isinstance(b, ast.BinOp) and isinstance(b.op, ast.Add)
+        and getattr(b.left, "id", None) == names[0]
+        and isinstance(b.right, ast.BinOp) and isinstance(b.right.op, ast.Mult)
+        and getattr(b.right.left, "id", None) == names[1]
+        and getattr(b.right.right, "id", None) == names[1]
+    )
+
+
+def _cosine_law_sites(path: str) -> list[str]:
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), path)
+    where = os.path.relpath(path, PKG)
+    found = []
+    for node in ast.walk(tree):
+        name = getattr(node, "id", None) or getattr(node, "name", None)
+        if isinstance(node, ast.Attribute):
+            name = node.attr
+        if name == "_dot":
+            found.append(f"{where}:{node.lineno} _dot")
+        elif isinstance(node, ast.Call) and _is_dot_fold(node):
+            found.append(f"{where}:{node.lineno} dot fold")
+        elif isinstance(node, ast.Lambda) and _is_norm_fold(node):
+            found.append(f"{where}:{node.lineno} norm fold")
+    return found
+
+
+def test_cosine_law_lives_in_pairdots():
+    offenders = []
+    for root, _dirs, files in os.walk(PKG):
+        for name in sorted(files):
+            path = os.path.join(root, name)
+            if name.endswith(".py") and path != PAIRDOTS:
+                offenders += _cosine_law_sites(path)
+    assert not offenders, (
+        "dot/norm folds outside operators/pairdots.py — call its cosine, "
+        f"norm or pair_cosine instead: {offenders}"
+    )
+    # the one home is still found by the same walk
+    assert sorted(s.split(maxsplit=1)[1] for s in _cosine_law_sites(PAIRDOTS)) == [
+        "dot fold", "norm fold",
+    ]

@@ -559,3 +559,16 @@ def test_ccnet_scoring_broadcast_gate_seam(spark, sf_dir):
     ungated = ccnet_score_vs_lm(docs, vw, v, bc, uc, n_docs=10**9)
     logical = ungated._jdf.queryExecution().logical().toString()
     assert "UnresolvedHint" not in logical and "ResolvedHint" not in logical
+
+
+def test_q157_ranks_only_its_take_ordered_top_k(spark, sf_dir):
+    """q157's global top-k is one TakeOrderedAndProject, and the rank window
+    reads only its BM25_TOP rows — never the corpus-sized score relation
+    moved to one partition."""
+    plan = explain.formatted_plan(get("q157_bm25_topk").build(spark, sf_dir))
+    tree = plan.split("\n\n")[0]
+    assert "TakeOrderedAndProject" in tree, tree
+    # the window sits directly on the top-k: no sort or exchange between
+    assert tree.index("Window") < tree.index("TakeOrderedAndProject"), tree
+    between = tree[tree.index("Window"):tree.index("TakeOrderedAndProject")]
+    assert "Exchange" not in between and "Sort" not in between, tree

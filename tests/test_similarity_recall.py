@@ -76,7 +76,8 @@ def _neardup_recall_contract(spark, data_dir, expect_truth):
     against brute-force cosine>=0.9 ground truth must be >= q53's."""
     from pyspark.sql import functions as F
 
-    from flink_adcom_spark.queries.similarity import NEARDUP_COSINE, _dot, _emb
+    from flink_adcom_spark.operators.pairdots import cosine
+    from flink_adcom_spark.queries.similarity import NEARDUP_COSINE, _emb
     from flink_adcom_spark.registry import get
 
     single = {(r["vec_a"], r["vec_b"]) for r in get("q53_embed_neardup_pairs").build(spark, data_dir).collect()}
@@ -86,7 +87,7 @@ def _neardup_recall_contract(spark, data_dir, expect_truth):
     e = _emb(spark, data_dir)
     a = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     b = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    cos = F.round(_dot("va", "vb") / (F.col("na") * F.col("nb")), 6)
+    cos = cosine("va", "na", "vb", "nb")
     truth = {
         (r["vec_a"], r["vec_b"])
         for r in a.join(b, F.col("vec_a") < F.col("vec_b"))

@@ -69,95 +69,3 @@ def test_quantized_cosine_close_to_exact(spark, sf_dir):
         for j in range(1, 40, 11):
             assert abs(cos(vs[i], vs[j]) - cos(qs[i], qs[j])) < 0.02
 
-
-def test_arrow_cosine_matches_hof_path(spark, sf_dir):
-    """The Arrow/BLAS brute-force scorer agrees with the codegen HOF dot
-    product to float tolerance on every (corpus, query) pair — same math,
-    different accumulation order — so either path can back a reranker."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from flink_adcom_spark.operators.vectors import cosine_scores_arrow
-    from flink_adcom_spark.queries.similarity import _dot, _emb
-
-    e = _emb(spark, sf_dir)
-    queries = [
-        (r["vec_id"], r["v"])
-        for r in e.filter(F.col("vec_id") < 5).select("vec_id", "v").collect()
-    ]
-    arrow = {
-        (r["vec_id"], r["q_id"]): r["cosine"]
-        for r in cosine_scores_arrow(e, queries).collect()
-    }
-    q = spark.createDataFrame(
-        [(i, v) for i, v in queries], "q_id long, qv array<double>"
-    ).withColumn(
-        "qn", F.sqrt(F.aggregate("qv", F.lit(0.0), lambda a, x: a + x * x))
-    )
-    hof = {
-        (r["vec_id"], r["q_id"]): r["cosine"]
-        for r in e.crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            "q_id",
-            (_dot("v", "qv") / (F.col("nrm") * F.col("qn"))).alias("cosine"),
-        )
-        .collect()
-    }
-    assert set(arrow) == set(hof) and arrow
-    for k, a in arrow.items():
-        assert math.isclose(a, hof[k], rel_tol=1e-9, abs_tol=1e-12), k
-
-
-def test_arrow_topk_reduction_preserves_top1(spark, sf_dir):
-    """per_partition_topk must never lose a global winner: the top-1 per
-    query from the reduced output equals the top-1 from all pairs (local
-    top-k per partition always contains the global top-k for k' <= k)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from flink_adcom_spark.operators.vectors import cosine_scores_arrow
-    from flink_adcom_spark.queries.similarity import _emb
-
-    e = _emb(spark, sf_dir)
-    queries = [
-        (r["vec_id"], r["v"])
-        for r in e.filter(F.col("vec_id") < 6).select("vec_id", "v").collect()
-    ]
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-
-    def top1(df):
-        return {
-            (r["q_id"], r["vec_id"])
-            for r in df.withColumn("r", F.row_number().over(w)).filter("r=1").collect()
-        }
-
-    assert top1(cosine_scores_arrow(e, queries)) == top1(
-        cosine_scores_arrow(e, queries, per_partition_topk=3)
-    )
-
-
-def test_arrow_topk_keeps_lowest_ids_under_ties(spark):
-    """Exact-duplicate vectors tied at the k boundary: the reduced path must
-    keep the LOWEST ids (the deterministic winner convention), not an
-    arbitrary tie subset — and must fold correctly across multiple batches
-    (one partition, forced tiny Arrow batches)."""
-    from pyspark.sql import functions as F
-
-    from flink_adcom_spark.operators.vectors import cosine_scores_arrow
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    try:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
-        # ten identical vectors (ids 0..9) + one distinct, single partition
-        rows = [(i, [1.0, 0.0]) for i in range(10)] + [(99, [0.0, 1.0])]
-        df = spark.createDataFrame(rows, "vec_id long, v array<double>").coalesce(1)
-        out = cosine_scores_arrow(df, [(0, [1.0, 0.0])], per_partition_topk=4)
-        got = sorted(r["vec_id"] for r in out.filter(F.col("cosine") > 0.99).collect())
-        assert got == [0, 1, 2, 3], got
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
