@@ -34,18 +34,29 @@ near-dup pairs (bucket), q135 (probe bucket against home bucket), q112 and
 q156 (cluster). A join with one broadcast-bounded side (query set,
 centroid table, literal matrix) or a fixed pair list (rescore pool,
 deduped candidates) uses the row form: q50, q56, q88, q109, q156b, q169,
-q171, q194 and the IVF probe/search. Measured at sf0.1 on 4 vCPUs (noop
-sink, min of 5, two rounds; every variant's result hash equal):
+q171, q194 and the IVF probe/search. Wall time of each blocked site
+against its row-form equi-join, `bench.run` at sf0.1 on 4 vCPUs (noop
+sink, min of 5 reps, three alternating rounds; row hashes equal):
 
-    q51  bucket self-join       fold 0.69/0.73 s   blocked 0.48/0.49 s
-    q112 cluster self-join      fold 3.12/3.21 s   blocked 0.73/0.79 s
-    q50  broadcast queries      fold 0.35-0.48 s   blocked 0.48-0.63 s
-    q109 rescore pool           fold 0.72/0.74 s   blocked 0.93/0.97 s
+    q51  bucket self-join      join 0.99/1.22/1.30 s   blocked 1.12/1.17/1.18 s
+    q53  bucket self-join      join 1.12/1.36/1.30 s   blocked 0.83/0.78/0.95 s
+    q164 bucket self-join      join 1.28/1.60/1.36 s   blocked 0.70/0.88/0.94 s
+    q112 cluster self-join     join 3.40/4.60/4.36 s   blocked 1.36/1.43/1.54 s
+    q156 cluster, both sides   join 4.20/5.11/5.03 s   blocked 1.40/1.79/1.77 s
+    q135 probe x bucket        blocked before and after, 1.11/1.22/1.34 s
+                               -> 1.04/1.18/1.17 s with the NULL filter
 
-(the blocked q50 replicated every query to each key; the blocked q109
-keyed the pool on q_id). The block law is the one of *Time Series
-Similarity Search for Streaming Data in Distributed Systems* (EDBT 2019):
-exact search inside blocks, no pair ever compared across blocks.
+At sf1 (20,000 vectors, one run each) q112 goes from 123 s to 33 s and
+q156 from 209 s to 42 s, row hashes equal. A blocked q50 (every query
+replicated to each key) and a blocked q109 (pool keyed on q_id) were
+slower than their row form in a prototype, 0.48-0.63 s against
+0.35-0.48 s and 0.93/0.97 s against 0.72/0.74 s, so those shapes keep the
+row form. The self-join sites filter ``a < b`` after the kernel, so each
+block ships its full matrix back and Spark drops just over half of it.
+
+The block law is the one of *Time Series Similarity Search for Streaming
+Data in Distributed Systems* (EDBT 2019): exact search inside blocks, no
+pair ever compared across blocks.
 
 Robustness: rows with a NULL key are dropped on both sides, as the
 equi-join drops them, so the row multiset is the equi-join's. A group
@@ -61,8 +72,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-# largest nl x nr one group may produce: 16.7M pairs, ~130 MB per dense
-# float64 matrix in the Python worker
+# largest nl x nr one group may produce. A group's peak in the Python
+# worker is ~8 bytes per pair per output column plus ~2 (five to six
+# columns: the carried ones, both norms and the dot), measured with the
+# kernel body and pyspark's Arrow conversion of its output: 42 bytes per
+# pair at five columns, 58 at seven. 1 << 24 = 16.7M pairs therefore caps
+# one group near 0.7-0.85 GB, under 1 GB per Python worker. The largest
+# sf1 block (q112/q156, 20,000 vectors, k = 18) is 1,333 x 1,333 = 1.8M
+# pairs.
 MAX_GROUP_PAIRS = 1 << 24
 
 
@@ -150,11 +167,14 @@ def pair_cosine(
         for i in range(q.shape[1]):
             np.multiply(q[:, i, None], d[None, :, i], out=term)
             acc += term
+        del term
         data = {c: np.repeat(lpdf[c].to_numpy(), nr) for c in carry_l + ["_ln"]}
         for c in carry_r + ["_rn"]:
             data[c] = np.tile(rpdf[c].to_numpy(), nl)
         data["_dot"] = acc.ravel()
-        return pd.DataFrame(data)
+        # copy=False keeps one nl x nr array per output column alive (acc is
+        # the _dot column); the default would consolidate into a second copy
+        return pd.DataFrame(data, copy=False)
 
     return (
         lside.groupBy("_k")
